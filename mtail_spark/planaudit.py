@@ -9,7 +9,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
+import warnings
+
+from mtail_spark.plans.demo_programs import DHCPD_PATH
 
 # Queries whose construction RUNS a streaming replay (the returned
 # DataFrame is the final memory-sink table — nothing left to check);
@@ -39,6 +43,34 @@ STREAMING_REPLAY: dict[str, str] = {
     # the 14th pair: event-time windows x HDR quantile cells
     "quantile_sketch_windowed_stream": "quantile_sketch_windowed",
 }
+
+# Queries whose construction reads a file from outside the repository
+# (the reference mtail checkout), mapped to that file.  Where the file
+# is absent the query cannot be built, so the whole-registry gates and
+# tools/pin_plan_fingerprints.py set exactly these names aside — the
+# decision is made on the path alone, never on an exception raised
+# while building a query.
+EXTERNAL_INPUT: dict[str, str] = {
+    "mtail_prog_dhcpd": DHCPD_PATH,
+    "mtail_prog_dhcpd_core": DHCPD_PATH,
+}
+
+
+def missing_external_inputs() -> dict[str, str]:
+    """The EXTERNAL_INPUT entries whose file does not exist; warns
+    with their names and paths when there are any."""
+    missing = {
+        name: path
+        for name, path in EXTERNAL_INPUT.items()
+        if not os.path.exists(path)
+    }
+    if missing:
+        warnings.warn(
+            "queries set aside, external input not found: "
+            + ", ".join(f"{n} ({p})" for n, p in missing.items()),
+            stacklevel=2,
+        )
+    return missing
 
 
 def formatted_plan(df) -> str:

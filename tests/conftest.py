@@ -8,6 +8,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from mtail_spark.session import get_spark  # noqa: E402
 
 
+# The reference mtail checkout (example programs, captured logs and
+# Go-mtail golden files).  It is not part of this repository; the
+# tests that read it skip where it is absent.
+REFERENCE = "/root/reference"
+
+requires_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE),
+    reason=f"reference mtail corpus {REFERENCE} is not present",
+)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("mtail-spark-tests", cpus=8, shuffle_partitions=8)

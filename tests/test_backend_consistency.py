@@ -15,6 +15,7 @@ import pytest
 
 from mtail_spark.compiler.api import compile_program
 from mtail_spark.store import diff_stores, rows_from_df
+from tests.conftest import requires_reference
 
 TD = "/root/reference/internal/mtail/testdata"
 EX = "/root/reference/examples"
@@ -55,6 +56,7 @@ def _consistent(spark, src, name, lines):
     return {(r.name, r.labels): r.value for r in vec}
 
 
+@requires_reference
 def test_dhcpd_synthetic(spark):
     src = open(f"{EX}/dhcpd.mtail").read()
     vals = _consistent(spark, src, "dhcpd.mtail", DHCPD_LINES)
@@ -80,6 +82,7 @@ VECTOR_TRIPLES = [
 ]
 
 
+@requires_reference
 @pytest.mark.parametrize("progf,logf", VECTOR_TRIPLES,
                          ids=[p for p, _l in VECTOR_TRIPLES])
 def test_backends_agree_on_reference_logs(spark, progf, logf):
@@ -90,6 +93,7 @@ def test_backends_agree_on_reference_logs(spark, progf, logf):
     _consistent(spark, src, progf, lines)
 
 
+@requires_reference
 def test_histogram_example(spark):
     """histogram.mtail: zero-lower-bound buckets, dimensioned and
     scalar histograms, assignment-as-observe."""
@@ -111,6 +115,7 @@ def test_histogram_example(spark):
     assert scount == 4
 
 
+@requires_reference
 def test_timer_example(spark):
     src = open(f"{EX}/timer.mtail").read()
     vals = _consistent(
@@ -121,6 +126,7 @@ def test_timer_example(spark):
     assert vals[("request_time_ms", (("vhost", "web2"),))] == 0
 
 
+@requires_reference
 def test_rails_synthetic(spark):
     """rails.mtail: float histogram observation from Int capref
     division (`$request_seconds / 1000.0`)."""
@@ -145,6 +151,7 @@ def test_rails_synthetic(spark):
     assert by_le[0.005] == 1 and by_le[0.1] == 1
 
 
+@requires_reference
 def test_apache_metrics_synthetic(spark):
     """apache_metrics.mtail: 5-key dimensioned histogram, µs->s float
     division, nested conn-status matches."""
@@ -175,6 +182,7 @@ def test_apache_metrics_synthetic(spark):
     assert vals[("http_connections_aborted_total", ab_key)] == 1
 
 
+@requires_reference
 def test_postfix_synthetic(spark):
     """postfix.mtail: syslog-decorated multi-app dispatch, Float caprefs
     from [0-9.] classes, scientific-notation histogram buckets."""
@@ -207,6 +215,7 @@ def test_remaining_examples_execute_vectorized(spark):
         assert rows is not None, name
 
 
+@requires_reference
 def test_mysql_register_chunk_boundaries(spark, monkeypatch):
     """mysql_slowqueries: scalar register state must flow across carry
     chunks.  A tiny CHUNK_LINES forces a chunk boundary inside nearly

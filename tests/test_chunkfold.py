@@ -13,6 +13,7 @@ from mtail_spark.compiler import chunkfold as CF
 from mtail_spark.compiler.api import compile_program
 from mtail_spark.sources.logs import read_log_lines
 from mtail_spark.store import rows_from_df
+from tests.conftest import requires_reference
 
 EX = "/root/reference/examples"
 TD = "/root/reference/internal/mtail/testdata"
@@ -46,6 +47,7 @@ def _assert_equal(spark, prog, df, monkeypatch, chunk_lines=97):
 # -------------------------------------------------------------- gate
 
 
+@requires_reference
 def test_gate_classification():
     from mtail_spark.compiler.chunkfold import chunkfold_unsupported_reason
 
@@ -80,6 +82,7 @@ def test_gate_classification():
 # ----------------------------------------------------- mysql (the class)
 
 
+@requires_reference
 def test_mysql_chunkfold_matches_fold(spark, tmp_path, monkeypatch):
     import importlib.util
 
@@ -102,6 +105,7 @@ def test_mysql_chunkfold_matches_fold(spark, tmp_path, monkeypatch):
     _assert_equal(spark, prog, df, monkeypatch)
 
 
+@requires_reference
 def test_mysql_zero_exchange_mode(spark, tmp_path, monkeypatch):
     """Splittable read + tiny split sizing drives the zero-exchange
     path (scan splits as chunks, contiguity audited)."""
@@ -262,6 +266,7 @@ def test_txn_demo_through_chunkfold(spark, monkeypatch):
 # ----------------------------------------------------- golden parity
 
 
+@requires_reference
 @pytest.mark.parametrize(
     "progf,logf,goldf",
     [

@@ -15,6 +15,7 @@ from mtail_spark.compiler.api import compile_program
 from mtail_spark.golden import read_golden
 from mtail_spark.sources.logs import read_log_lines
 from mtail_spark.store import diff_stores, rows_from_df
+from tests.conftest import requires_reference
 
 TD = "/root/reference/internal/mtail/testdata"
 EX = "/root/reference/examples"
@@ -37,6 +38,7 @@ def _compile(progf):
     return compile_program(open(f"{EX}/{progf}").read(), progf)
 
 
+@requires_reference
 @pytest.mark.parametrize("progf,logf,goldf", TRIPLES,
                          ids=[f"{p}-{l}" for p, l, g in TRIPLES])
 def test_golden_local_fold(progf, logf, goldf):
@@ -51,6 +53,7 @@ def test_golden_local_fold(progf, logf, goldf):
     assert d.ok, d.render()
 
 
+@requires_reference
 @pytest.mark.parametrize("progf,logf,goldf", TRIPLES,
                          ids=[f"{p}-{l}" for p, l, g in TRIPLES])
 def test_golden_spark(spark, progf, logf, goldf):

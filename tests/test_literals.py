@@ -10,6 +10,7 @@ from mtail_spark.compiler.literals import (
     required_literal,
     required_literal_py,
 )
+from tests.conftest import requires_reference
 
 
 CASES = [
@@ -77,6 +78,7 @@ def test_literal_is_sound(pat, want):
             assert want in s, (pat, want, s)
 
 
+@requires_reference
 def test_sound_on_reference_examples():
     """Every literal claimed for a real reference program's patterns
     must appear in strings matching that pattern (fuzz with the
@@ -132,6 +134,7 @@ def test_py_expected(pat, want):
     assert required_literal_py(pat) == want
 
 
+@requires_reference
 def test_py_sound_on_reference_examples():
     """Soundness of the Python-dialect analyzer on every pattern in
     the reference examples: any line of the matching golden log that

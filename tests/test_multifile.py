@@ -7,11 +7,13 @@ from pyspark.sql import functions as F
 from mtail_spark.compiler.api import compile_program
 from mtail_spark.sources.logs import read_log_lines
 from mtail_spark.store import rows_from_df
+from tests.conftest import requires_reference
 
 TD = "/root/reference/internal/mtail/testdata"
 EX = "/root/reference/examples"
 
 
+@requires_reference
 def test_vsftpd_two_logs_merge(spark, tmp_path):
     src = open(f"{EX}/vsftpd.mtail").read()
     prog = compile_program(src, "vsftpd.mtail")

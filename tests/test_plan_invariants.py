@@ -16,7 +16,9 @@ Python) fails CI instead of waiting for a bench to notice:
 
 Streaming-replay queries execute eagerly and return memory-sink
 tables (their plan is the already-computed local relation), so the
-invariants are checked on their batch duals instead.
+invariants are checked on their batch duals instead.  Queries whose
+external input file is absent (planaudit.EXTERNAL_INPUT) are set
+aside by name, with a warning; every other query is checked.
 """
 
 import json
@@ -29,6 +31,7 @@ from mtail_spark.planaudit import (
     STREAMING_REPLAY,
     empty_partition_windows as _empty_partition_windows,
     formatted_plan,
+    missing_external_inputs,
     plan_fingerprint,
 )
 
@@ -71,8 +74,9 @@ def all_plans(spark, sf_smoke):
     # invariants under a distinct key
     for name, fn in entrymod.PRODUCTION_VARIANTS.items():
         todo[f"{name}@prod"] = fn
+    set_aside = missing_external_inputs()
     for name, fn in todo.items():
-        if name in STREAMING_REPLAY:
+        if name in STREAMING_REPLAY or name in set_aside:
             continue
         df = fn(spark, sf_smoke)
         plans[name] = {
@@ -167,6 +171,10 @@ def test_plan_fingerprints_pinned_exactly(all_plans):
                              "plan_fingerprints.json")
     with open(pins_path) as fh:
         expected = json.load(fh)
+    # pins of queries set aside for a missing external input stay in
+    # the file and are checked wherever that input exists
+    set_aside = missing_external_inputs()
+    expected = {n: v for n, v in expected.items() if n not in set_aside}
     actual = {
         n: plan_fingerprint(p["fmt"], p["opt"])
         for n, p in all_plans.items()

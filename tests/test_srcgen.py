@@ -13,6 +13,7 @@ from hypothesis import given, settings, strategies as st
 
 from mtail_spark.compiler.checker import check
 from mtail_spark.compiler.interp import Interp
+from tests.conftest import requires_reference
 
 TD = "/root/reference/internal/mtail/testdata"
 EX = "/root/reference/examples"
@@ -60,6 +61,7 @@ GOLDEN = [
 ]
 
 
+@requires_reference
 @pytest.mark.parametrize("progf,logf", GOLDEN,
                          ids=[f"{p}-{l}" for p, l in GOLDEN])
 def test_srcgen_equals_closures_on_goldens(progf, logf):

@@ -10,11 +10,13 @@ import time
 from mtail_spark.compiler.api import compile_program
 from mtail_spark.sources.sockets import read_socket_lines
 from mtail_spark.streaming.stateful import run_stateful_stream
+from tests.conftest import requires_reference
 
 TD = "/root/reference/internal/mtail/testdata"
 EX = "/root/reference/examples"
 
 
+@requires_reference
 def test_mysql_records_across_batches(spark, tmp_path):
     src = open(f"{EX}/mysql_slowqueries.mtail").read()
     prog = compile_program(src, "mysql_slowqueries.mtail")

@@ -18,6 +18,10 @@ and commit the regenerated JSON together with the code change, noting
 the reason in the commit message.  The pin is computed on the same
 session shape as the test session (8 cores / 8 shuffle partitions)
 over the same sf0.001 plans, so tool and test can never disagree.
+
+Queries whose external input file is absent (planaudit.EXTERNAL_INPUT)
+cannot be built; their committed pins are carried over unchanged, and
+their names printed, so a re-pin without that input keeps them.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 from mtail_spark.planaudit import (  # noqa: E402
     STREAMING_REPLAY,
     formatted_plan,
+    missing_external_inputs,
     plan_fingerprint,
 )
 from mtail_spark.session import get_spark  # noqa: E402
@@ -54,10 +59,20 @@ def main() -> None:
     todo = dict(entrymod.queries())
     for name, fn in entrymod.PRODUCTION_VARIANTS.items():
         todo[f"{name}@prod"] = fn
+    set_aside = missing_external_inputs()
+    committed = {}
+    if set_aside:
+        with open(OUT) as fh:
+            committed = json.load(fh)
     pins = {}
     for name, fn in todo.items():
         if name in STREAMING_REPLAY:
             continue  # replays execute eagerly; audited via batch duals
+        if name in set_aside:
+            pins[name] = committed[name]
+            print(f"carried over {name} (missing {set_aside[name]})",
+                  file=sys.stderr)
+            continue
         df = fn(spark, SF)
         pins[name] = plan_fingerprint(
             formatted_plan(df),
