@@ -4253,9 +4253,8 @@ def _sql_cosine(a: str, b: str) -> str:
 
 
 def _sql_sqdist_lits(vec: str, center: list[float]) -> str:
-    """Unrolled squared distance to a literal centroid; the same
-    left-fold order as similarity._sqdist_lits so argmin choices are
-    bit-identical across engines."""
+    """Unrolled squared distance to a literal centroid, summed left
+    to right so argmin choices are bit-identical across engines."""
     terms = []
     for i, v in enumerate(center, start=1):
         d = f"(CAST({vec}[{i}] AS DOUBLE) - ({v!r}))"

@@ -26,6 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from mtail_spark.planaudit import missing_external_inputs  # noqa: E402
 from mtail_spark.session import get_spark  # noqa: E402
 
 BENCH_QUERIES = [
@@ -203,13 +204,18 @@ def _time_queries(spark, qs, names, sf_dir, repeats=3):
     """median-of-N warm (primary), best-of-N, and first-run cold per
     query.  The median is the per-round comparison number — single
     best-of runs swung ~2x between rounds on sub-second queries
-    (GC/codegen jitter); the min is the capability number."""
+    (GC/codegen jitter); the min is the capability number.  Queries
+    whose external input file is missing (planaudit.EXTERNAL_INPUT)
+    are left out; main() names them."""
     import statistics
 
     from mtail_spark.session import reset_scan_tuning
 
+    set_aside = missing_external_inputs()
     med, best, cold = {}, {}, {}
     for name in names:
+        if name in set_aside:
+            continue
         ts = []
         for r in range(repeats):
             # each query tunes scan split sizing for its own data;
@@ -510,6 +516,13 @@ def _sf1_dir() -> str | None:
     return _scaled_dir("sf1", 10)
 
 
+def _klines_per_sec(n_lines, timings, name):
+    """Throughput of one timed query, or None when it was set aside."""
+    if name not in timings:
+        return None
+    return round(n_lines / 1000.0 / max(timings[name], 1e-9), 1)
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -575,8 +588,8 @@ def main():
             n_events / 1000.0 / max(timings["mtail_prog_counters"], 1e-9), 1
         ),
         # vs the reference's slowest row (dhcpd-class, ~6 klines/s)
-        "dhcpd_klines_per_sec": round(
-            n_events / 1000.0 / max(timings["mtail_prog_dhcpd"], 1e-9), 1
+        "dhcpd_klines_per_sec": _klines_per_sec(
+            n_events, timings, "mtail_prog_dhcpd"
         ),
         # Min-basis (best-of-N) is the PRIMARY cross-round comparison
         # basis for every query at both scales (queries_min /
@@ -586,10 +599,8 @@ def main():
         # warm-median fields above remain for continuity with earlier
         # rounds' records.
         "cross_round_basis": "min",
-        "dhcpd_klines_per_sec_best": round(
-            n_events / 1000.0
-            / max(timings_min["mtail_prog_dhcpd"], 1e-9),
-            1,
+        "dhcpd_klines_per_sec_best": _klines_per_sec(
+            n_events, timings_min, "mtail_prog_dhcpd"
         ),
         "compiled_program_klines_per_sec_best": round(
             n_events / 1000.0
@@ -616,6 +627,15 @@ def main():
             1,
         ),
     }
+
+    # queries left untimed because their input file is missing, with
+    # the file each one needs
+    skipped = {
+        q: path for q, path in missing_external_inputs().items()
+        if q in BENCH_QUERIES + SF1_QUERIES + SF10_QUERIES
+    }
+    if skipped:
+        result["skipped"] = skipped
 
     sf1 = _sf1_dir()
     min1 = None

@@ -361,12 +361,10 @@ class CompiledProgram:
         — which is the difference between folding every line and
         folding only the relevant ones at 100 TB.  Declarations are
         runtime no-ops; decorators are already spliced by the checker.
-        Patterns are prefixed with `(?U)` (UNICODE_CHARACTER_CLASS)
-        so Java's `\\d`/`\\w`/`\\b` agree with the Python `re`
-        semantics the fold interpreter uses — without it a line with
-        non-ASCII digits/word chars would be dropped JVM-side yet
-        counted by the interpreter.  Returns java-regex patterns, or
-        None when filtering is unsafe.
+        The patterns are the checker's translation, which Java and the
+        interpreter's Python `re` both match as RE2 does, so the JVM
+        drops exactly the lines the interpreter would ignore.  Returns
+        java-regex patterns, or None when filtering is unsafe.
         """
         from mtail_spark.compiler import ast as A
         from mtail_spark.compiler.checker import strip_group_names
@@ -388,7 +386,7 @@ class CompiledProgram:
                     info = self.checked.regexes[cond.regex_id]
                     if info.subject is not None:
                         return None
-                    pats.append("(?U)" + strip_group_names(info.pattern))
+                    pats.append(strip_group_names(info.pattern))
                     continue
             return None
         return pats or None

@@ -7,8 +7,9 @@ checker.go:45-878, in AST-to-AST form):
 - decorator splicing: each `@deco { block }` becomes a deep copy of the
   decorator body with `next` replaced by the decorated block
 - pattern resolution: const refs concatenated into one pattern string
-  per site, POSIX classes translated, regex compiled (validation), and
-  capture groups registered
+  per site, translated into the dialect every backend reads as RE2
+  (translate_regex), regex compiled (validation), and capture groups
+  registered
 - capref resolution: each $n / $name bound to (regex_id, group) using
   lexical scoping over condition nesting
 - type inference: capture-group types from regex character sets
@@ -29,30 +30,191 @@ from mtail_spark.compiler import ast as A
 from mtail_spark.compiler.gotime import to_python as layout_to_python
 from mtail_spark.compiler.parser import parse
 
-POSIX_CLASSES = {
-    "alpha": "A-Za-z",
-    "digit": "0-9",
-    "alnum": "0-9A-Za-z",
-    "upper": "A-Z",
-    "lower": "a-z",
-    "space": r" \t\n\r\f\v",
-    "punct": r"!-/:-@\[-`{-~",
-    "print": r"\x20-\x7e",
-    "graph": r"\x21-\x7e",
-    "xdigit": "0-9A-Fa-f",
-    "word": r"0-9A-Za-z_",
-    "blank": r" \t",
+# Go regexp/syntax's Perl and POSIX classes (perl_groups.go) as code
+# point ranges.  RE2 defines them over ASCII whatever the input;
+# Python `re` widens \d \w \s to Unicode and java.util.regex takes
+# \x0B into \s, so translate_regex writes them out as explicit sets.
+_PERL = {
+    "d": [(0x30, 0x39)],
+    "s": [(0x09, 0x0A), (0x0C, 0x0D), (0x20, 0x20)],
+    "w": [(0x30, 0x39), (0x41, 0x5A), (0x5F, 0x5F), (0x61, 0x7A)],
 }
+_POSIX = {
+    "alnum": [(0x30, 0x39), (0x41, 0x5A), (0x61, 0x7A)],
+    "alpha": [(0x41, 0x5A), (0x61, 0x7A)],
+    "ascii": [(0x00, 0x7F)],
+    "blank": [(0x09, 0x09), (0x20, 0x20)],
+    "cntrl": [(0x00, 0x1F), (0x7F, 0x7F)],
+    "digit": [(0x30, 0x39)],
+    "graph": [(0x21, 0x7E)],
+    "lower": [(0x61, 0x7A)],
+    "print": [(0x20, 0x7E)],
+    "punct": [(0x21, 0x2F), (0x3A, 0x40), (0x5B, 0x60), (0x7B, 0x7E)],
+    "space": [(0x09, 0x0D), (0x20, 0x20)],
+    "upper": [(0x41, 0x5A)],
+    "word": _PERL["w"],
+    "xdigit": [(0x30, 0x39), (0x41, 0x46), (0x61, 0x66)],
+}
+_WORD = "[0-9A-Za-z_]"
+# RE2's \b, \B and end of text; Java's $ also matches before a final
+# \r or \u0085 and Python's before a final \n
+_BOUNDARY = f"(?:(?<={_WORD})(?!{_WORD})|(?<!{_WORD})(?={_WORD}))"
+_NOT_BOUNDARY = f"(?:(?<={_WORD})(?={_WORD})|(?<!{_WORD})(?!{_WORD}))"
+_END = "(?!(?s:.))"
+_ESCAPE = re.compile(r"\\(?:x\{[0-9A-Fa-f]*\}|x[0-9A-Fa-f]{0,2}|.)", re.S)
+_FLAGS = re.compile(r"\(\?([a-zA-Z]*)(?:-([a-zA-Z]*))?([:)])")
+_REPEAT = re.compile(r"\{\d+(?:,\d*)?\}")
+_POSIX_CLASS = re.compile(r"\[:(\^?)([a-z]+):\]")
+
+
+def _code_point(c: int) -> str:
+    ch = chr(c)
+    if ch.isascii() and (ch.isalnum() or ch == "_"):
+        return ch
+    if ch in "\t\n\r":
+        return repr(ch)[1:-1]
+    if c <= 0xFF:
+        return f"\\x{c:02x}"
+    if c <= 0xFFFF:
+        return f"\\u{c:04x}"
+    # above U+FFFF the two engines spell escapes differently; both
+    # read the character itself
+    return ch
+
+
+def _class_body(ranges, negate: bool = False) -> str:
+    """Ranges as class-body text, or their complement over all of
+    Unicode when `negate` (a \\D inside [...] cannot be a [^...])."""
+    if negate:
+        comp, nxt = [], 0
+        for lo, hi in ranges:
+            if lo > nxt:
+                comp.append((nxt, lo - 1))
+            nxt = hi + 1
+        ranges = comp + [(nxt, 0x10FFFF)]
+    return "".join(
+        f"{_code_point(lo)}-{_code_point(hi)}" if hi > lo + 1
+        else "".join(map(_code_point, range(lo, hi + 1)))
+        for lo, hi in ranges
+    )
+
+
+def _class_char(p: str, j: int) -> tuple[str, int]:
+    """One class member at p[j], as text both engines read as that
+    one character: [ & ^ - ] are escaped (Java reads [ and && as
+    class union and intersection)."""
+    if p[j] == "\\" and j + 1 < len(p):
+        m = _ESCAPE.match(p, j)
+        return (r"\x0b" if m[0] == r"\v" else m[0]), m.end()
+    if p[j] in "[]^-&":
+        return "\\" + p[j], j + 1
+    return p[j], j + 1
+
+
+def _translate_class(p: str, i: int, out: list) -> int:
+    """Translate the RE2 class opening at p[i]; returns the index
+    after it."""
+    j = i + 1
+    neg = p.startswith("^", j)
+    j += neg
+    body = []
+    first = True  # a leading ] is a member
+    while j < len(p) and (p[j] != "]" or first):
+        first = False
+        m = _POSIX_CLASS.match(p, j)
+        if m and m[2] in _POSIX:
+            body.append(_class_body(_POSIX[m[2]], bool(m[1])))
+            j = m.end()
+            continue
+        if p[j] == "\\" and p[j + 1 : j + 2].lower() in ("d", "s", "w"):
+            e = p[j + 1]
+            body.append(_class_body(_PERL[e.lower()], e.isupper()))
+            j += 2
+            continue
+        lo, j = _class_char(p, j)
+        if p.startswith("-", j) and p[j + 1 : j + 2] not in ("]", ""):
+            hi, j = _class_char(p, j + 1)
+            lo = f"{lo}-{hi}"
+        body.append(lo)
+    if j >= len(p):  # unterminated: leave it for re.compile to reject
+        out.append(p[i:])
+        return j
+    out.append("[" + "^" * neg + "".join(body) + "]")
+    return j + 1
 
 
 def translate_regex(pattern: str) -> str:
-    """RE2 -> Python/Java common dialect: expand POSIX classes.  The
-    (?P<name>) syntax is shared by RE2 and Python; the Spark backend
-    strips names (Java group-name charset is narrower)."""
-    def sub(m):
-        return POSIX_CLASSES.get(m.group(1), m.group(0))
+    """RE2 -> the one dialect java.util.regex and Python `re` both
+    read as RE2 does.  Every backend runs (and every literal gate
+    analyses) this text.
 
-    return re.sub(r"\[:(\w+):\]", sub, pattern)
+    - \\d \\w \\s, their negations and the POSIX [[:name:]] classes
+      become explicit ASCII sets, inside [...] too (a negation there
+      as complement ranges);
+    - \\b \\B become ASCII lookarounds, \\v the vertical tab;
+    - `.` becomes [^\\n] (Java's also rejects \\r and \\u0085), `$`
+      and \\z the end of text only, and under (?m) `^` `$` break at
+      \\n only;
+    - inside classes [ & ^ - ] are escaped, and a { that cannot start
+      a repeat is a literal, as in RE2.
+    The (?P<name>) syntax is shared by RE2 and Python; the Spark
+    backend strips names (Java group-name charset is narrower)."""
+    out = []
+    flags = [""]  # inline flags in force, one entry per open group
+    i = 0
+    while i < len(pattern):
+        c = pattern[i]
+        if c == "\\" and i + 1 < len(pattern):
+            m = _ESCAPE.match(pattern, i)
+            e = m[0][1]
+            i = m.end()
+            if e.lower() in ("d", "s", "w"):
+                neg = "^" if e.isupper() else ""
+                out.append(f"[{neg}{_class_body(_PERL[e.lower()])}]")
+            else:
+                out.append({
+                    "b": _BOUNDARY, "B": _NOT_BOUNDARY, "z": _END,
+                    "v": r"\x0b",
+                }.get(e, m[0]))
+        elif c == "[":
+            i = _translate_class(pattern, i, out)
+        elif c in ".$^":
+            fl = flags[-1]
+            out.append({
+                ".": "(?s:.)" if "s" in fl else r"[^\n]",
+                "$": r"(?![^\n])" if "m" in fl else _END,
+                "^": r"(?<![^\n])" if "m" in fl else "^",
+            }[c])
+            i += 1
+        elif c == "(":
+            fl = flags[-1]
+            m = _FLAGS.match(pattern, i)
+            if m:
+                fl = "".join(
+                    f for f in set(fl + m[1]) if f not in (m[2] or "")
+                )
+                out.append(m[0])
+                i = m.end()
+                if m[3] == ")":
+                    flags[-1] = fl
+                    continue
+            else:
+                out.append(c)
+                i += 1
+            flags.append(fl)
+        elif c == ")":
+            if len(flags) > 1:
+                flags.pop()
+            out.append(c)
+            i += 1
+        elif c == "{":
+            m = _REPEAT.match(pattern, i)
+            out.append(m[0] if m else r"\{")
+            i = m.end() if m else i + 1
+        else:
+            out.append(c)
+            i += 1
+    return "".join(out)
 
 
 def strip_group_names(pattern: str) -> str:
@@ -68,7 +230,7 @@ class CheckError(ValueError):
 @dataclass
 class RegexInfo:
     id: int
-    pattern: str  # translated, python-compatible
+    pattern: str  # translate_regex's output, read alike by Java and Python
     n_groups: int = 0
     group_types: dict = field(default_factory=dict)  # group_no -> vtype
     subject: object = None  # AST expr the regex applies to; None = line

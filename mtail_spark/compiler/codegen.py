@@ -69,29 +69,6 @@ def _const_eval(e):
     return None
 
 
-def count_capturing_groups(pat: str) -> int:
-    """Count capturing groups in a (Java/RE2) pattern: unescaped '('
-    not starting a '(?' construct, outside character classes.  Group
-    names are already stripped upstream (strip_group_names)."""
-    n = 0
-    i = 0
-    in_class = False
-    while i < len(pat):
-        c = pat[i]
-        if c == "\\":
-            i += 2
-            continue
-        if in_class:
-            if c == "]":
-                in_class = False
-        elif c == "[":
-            in_class = True
-        elif c == "(" and not pat.startswith("(?", i):
-            n += 1
-        i += 1
-    return n
-
-
 # Unit-separator delimiter for the single-pass capture extraction.
 # Lines containing it take the per-group regexp_extract fallback
 # branch, so correctness never depends on it being absent.
@@ -354,9 +331,10 @@ class Vectorizer:
             required_prefix,
         )
 
+        info = self.prog.regexes[rid]
         subj = self._subject(rid)
         pat = self._java_pattern(rid)
-        ngroups = count_capturing_groups(pat)
+        ngroups = info.n_groups
         # wrapper consumes the whole subject around the FIRST match
         # (leftmost, like regexp_extract); original group g becomes
         # wrapper group g+1, the full match is wrapper group 1
@@ -371,8 +349,8 @@ class Vectorizer:
         # line failing the gate cannot match, and regexp_replace
         # would have returned the subject unchanged, so the gate
         # substitutes `subj` directly.
-        pref = required_prefix(pat)
-        lit = required_literal(pat)
+        pref = required_prefix(info.pattern)
+        lit = required_literal(info.pattern)
         if pref is not None and (lit is None or len(pref) >= 6):
             reject = (
                 f"WHEN NOT startswith({subj}, {sq(pref)}) "
@@ -400,8 +378,7 @@ class Vectorizer:
         matches or the subject is NULL."""
         from mtail_spark.compiler.literals import literal_alternation
 
-        pat = self._java_pattern(rid)
-        alts = literal_alternation(pat)
+        alts = literal_alternation(self.prog.regexes[rid].pattern)
         if alts is None:
             return None
         subj = self._subject(rid)
@@ -711,9 +688,7 @@ class Vectorizer:
             if isinstance(old, A.PatternLit):
                 if not isinstance(new, A.StringLit):
                     raise VectorizeError("dynamic subst replacement")
-                pat = strip_group_names(
-                    self.prog.regexes[old.regex_id].pattern
-                )
+                pat = self._java_pattern(old.regex_id)
                 lit = new.value.replace("\\", "\\\\").replace("$", "\\$")
                 return f"regexp_replace({cv}, {sq(pat)}, {sq(lit)})", "String"
             co, _ = self._expr(old)
@@ -1745,9 +1720,9 @@ def vectorized_store(
 
     _BUCKETS_T = "array<struct<le:double,count:bigint>>"
 
-    def _dispatch(fn, rtype):
+    def _dispatch(fn, rtype, default="NULL"):
         """name -> per-metric constant/column, as one CASE chain."""
-        col = F.lit(None).cast(rtype)
+        col = F.expr(f"CAST({default} AS {rtype})")
         for nm, mi in by_name.items():
             v = fn(nm, mi)
             if v is not None:
@@ -1806,7 +1781,9 @@ def vectorized_store(
                 ),
                 "string",
             ).alias("vtype"),
-            _dispatch(_labels_map, "map<string,string>").alias("labels"),
+            # unlabelled metrics carry an empty map, as the folds do
+            _dispatch(_labels_map, "map<string,string>", "map()")
+            .alias("labels"),
             F.when(is_counter & (vt == "Int"), F.col("sum_i"))
             .when(~is_counter & ~is_hist, lvi_col)
             .alias("value_i"),
@@ -1837,7 +1814,7 @@ def vectorized_store(
             zero_rows.append(
                 {
                     "prog": compiled.name, "name": nm, "kind": "counter",
-                    "vtype": mi.vtype, "labels": None,
+                    "vtype": mi.vtype, "labels": {},
                     "value_i": 0 if mi.vtype != "Float" else None,
                     "value_f": 0.0 if mi.vtype == "Float" else None,
                     "value_s": None, "buckets": None, "bucket_count": None,
@@ -1848,7 +1825,7 @@ def vectorized_store(
             zero_rows.append(
                 {
                     "prog": compiled.name, "name": nm, "kind": "histogram",
-                    "vtype": "Buckets", "labels": None,
+                    "vtype": "Buckets", "labels": {},
                     "value_i": None, "value_f": None, "value_s": None,
                     "buckets": [
                         {"le": mx, "count": 0} for mx in _bucket_maxes(mi)

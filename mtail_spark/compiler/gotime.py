@@ -78,10 +78,6 @@ _TOKENS = [
 ]
 
 
-class LayoutError(ValueError):
-    pass
-
-
 def parse_layout(layout: str):
     """Tokenize a Go layout. Returns (tokens, fields) where tokens is a
     list of ('tok', entry) / ('lit', text)."""

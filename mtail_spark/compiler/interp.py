@@ -313,13 +313,13 @@ class Interp:
         self.tz = tz
         self.prog = prog
         self.syslog_use_current_year = syslog_use_current_year
-        from mtail_spark.compiler.literals import required_literal_py
+        from mtail_spark.compiler.literals import required_literal
 
         self.res = {r.id: re.compile(r.pattern) for r in prog.regexes}
         # C-speed substring prefilter per regex: `lit not in s` proves
         # search() would return None without running the regex engine
         # (Go's RE2 does the same literal-prefix skip natively)
-        self.re_lit = {r.id: required_literal_py(r.pattern)
+        self.re_lit = {r.id: required_literal(r.pattern)
                        for r in prog.regexes}
         self.subjects = {
             r.id: (self._c_expr(r.subject) if r.subject is not None else None)

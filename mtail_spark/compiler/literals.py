@@ -1,315 +1,176 @@
-"""Required-literal analysis for regex cheap-reject prefilters.
+"""Literal gates for regex sites, derived from the pattern's parse tree.
 
 A pattern like `DHCPACK on (\\S+) to (\\S+)` can only match lines that
-contain the literal substring "DHCPACK on " — so an `instr(line, lit)`
-check (a vectorized substring scan, no backtracking) can gate the
-expensive regex execution per site.  At 27 sites/program (dhcpd) most
-lines match at most one site; every other site's regex is skipped.
+contain "DHCPACK on ", so a substring test (a vectorized `instr` on
+the JVM, `in` in the interpreters) can skip the regex engine on every
+other line.  At 27 sites per program (dhcpd) most lines match at most
+one site, so most regex executions are skipped.  This is the
+literal-factoring trick of RE2's prefix analysis and Hyperscan's
+literal decomposition.
 
-This is the classic literal-factoring trick from RE2's prefix analysis
-and Hyperscan's literal decomposition (public literature); here it is
-deliberately CONSERVATIVE: it returns a literal only when that literal
-provably appears in every match, else None.
+Every pattern reaches the backends in the one dialect that
+`checker.translate_regex` writes, which java.util.regex and Python
+`re` read alike.  So one analysis serves all of them: Python's own
+parser turns that text into a tree, and each gate below reads the
+tree.  Syntax is never guessed, and the parser's own rewrites
+(common branch prefixes factored out, single-char branches merged
+into a set) are sound to read through.
 
-Rules (scanning the Java-syntax pattern left to right, depth 0 only):
-- literal chars extend the current run; metachars/classes/groups end it
-- a quantifier that makes the previous char optional (?, *, {0,...})
-  drops that char from the run; + / {n>=1,...} keeps it but ends the run
-- alternation at depth 0 means no single required literal -> None
-- groups are skipped wholesale (their contents may be optional)
-- inline flags ((?i) etc.) make literal matching unreliable -> None
+Each gate claims only what holds for every match and returns None
+otherwise.  A gate that claims too little skips an optimisation; one
+that claims too much drops lines.  Case-insensitive patterns get no
+gate.
 """
 
 from __future__ import annotations
 
-_CLASS_ESCAPES = set("dDwWsSbBAzZGhHvV")
-_PUNCT = set(r"\.[]{}()*+?^$|/-&~#=!<>:,;'\"`@% ")
+import re
+
+try:
+    import re._parser as _sre
+except ImportError:  # pragma: no cover - Python < 3.11
+    import sre_parse as _sre
+
+_REPEATS = {_sre.MAX_REPEAT, _sre.MIN_REPEAT}
+# literal_alternation's CASE gets one WHEN per word; past this many
+# the regex is left to the engine
+_MAX_WORDS = 256
+if hasattr(_sre, "POSSESSIVE_REPEAT"):
+    _REPEATS.add(_sre.POSSESSIVE_REPEAT)
+
+
+def _parse(pattern: str):
+    try:
+        tree = _sre.parse(pattern)
+    except re.error:
+        return None
+    if tree.state.flags & re.IGNORECASE:
+        return None
+    return tree
+
+
+def _plain(av) -> bool:
+    """A SUBPATTERN whose literals match only themselves."""
+    return not av[1] & re.IGNORECASE
 
 
 def required_literal(pattern: str, min_len: int = 3) -> str | None:
-    """Longest literal substring guaranteed to appear in every match
-    of `pattern`, or None if no such literal of >= min_len exists (or
-    the analysis can't prove one safely)."""
-    runs: list[str] = []
-    cur: list[str] = []
+    """Longest literal substring of at least `min_len` characters that
+    appears in every match of `pattern`, or None.
 
-    def flush():
-        if cur:
-            runs.append("".join(cur))
-            cur.clear()
-
-    i, n = 0, len(pattern)
-    while i < n:
-        c = pattern[i]
-        if c == "\\":
-            if i + 1 >= n:
-                return None
-            e = pattern[i + 1]
-            if e in _CLASS_ESCAPES:
-                flush()
-                i += 2
-            elif e in ("n", "t", "r", "f", "a", "e"):
-                # control escapes are literal but rarely selective;
-                # treat as run breakers rather than decode them
-                flush()
-                i += 2
-            elif e in ("x", "u", "0", "c", "p", "P", "k", "Q"):
-                # coded escapes / properties / backrefs / quoting:
-                # give up on this pattern rather than mis-decode
-                return None
-            elif e.isdigit():
-                return None  # backreference
-            else:
-                cur.append(e)  # escaped punctuation is a literal char
-                i += 2
-        elif c == "(":
-            if pattern.startswith("(?", i) and not pattern.startswith(
-                "(?:", i
-            ):
-                # (?i) (?m) (?s)... flags change matching globally;
-                # lookarounds are rare in this DSL — bail out safely
-                # ((?s) from the caller's wrapper is added AFTER this
-                # analysis, so it never reaches here)
-                return None
-            flush()
-            depth = 1
-            i += 1
-            in_cls = False
-            while i < n and depth:
-                ch = pattern[i]
-                if ch == "\\":
-                    i += 2
-                    continue
-                if in_cls:
-                    if ch == "]":
-                        in_cls = False
-                elif ch == "[":
-                    in_cls = True
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                i += 1
-            if depth:
-                return None  # unbalanced — don't guess
-            # a quantifier after the group applies to the group only
-            i = _skip_quantifier(pattern, i)
-        elif c == "[":
-            flush()
-            i += 1
-            if i < n and pattern[i] == "^":
-                i += 1
-            if i < n and pattern[i] == "]":
-                i += 1  # leading ] is a literal member
-            while i < n and pattern[i] != "]":
-                i += 2 if pattern[i] == "\\" else 1
-            if i >= n:
-                return None
-            i = _skip_quantifier(pattern, i + 1)
-        elif c == "|":
-            return None  # depth-0 alternation: nothing is required
-        elif c in ("*", "?"):
-            if cur:
-                cur.pop()  # previous char now optional
-            flush()
-            i = _skip_lazy(pattern, i + 1)
-        elif c == "{":
-            j = pattern.find("}", i)
-            if j == -1:
-                cur.append(c)  # Java treats a bare { as literal
-                i += 1
-                continue
-            body = pattern[i + 1 : j]
-            low = body.split(",")[0].strip()
-            if not (low.isdigit()):
-                cur.append(c)
-                i += 1
-                continue
-            if int(low) == 0:
-                if cur:
-                    cur.pop()
-            else:
-                pass  # >=1 occurrence: char stays, but run must end
-            flush()
-            i = _skip_lazy(pattern, j + 1)
-        elif c == "+":
-            flush()  # char required once; repetition ends the run
-            i = _skip_lazy(pattern, i + 1)
-        elif c in ("^", "$", "."):
-            flush()
-            i += 1
-        else:
-            cur.append(c)
-            i += 1
-    flush()
-    best = max(runs, key=len, default="")
-    return best if len(best) >= min_len else None
-
-
-def required_prefix(pattern: str, min_len: int = 3) -> str | None:
-    """Literal PREFIX guaranteed to start every match of an anchored
-    Java pattern (`^DHCPDISCOVER from ...` -> "DHCPDISCOVER from "),
-    or None.  Strictly stronger than `required_literal` as a reject
-    gate: `startswith(subj, pref)` is a single bounded memcmp, while
-    `instr(subj, lit)` scans the whole subject.  Only sound because
-    the vectorized backend never sets MULTILINE — `^` matches at
-    position 0 only, so every match must begin with the prefix."""
-    if not pattern.startswith("^"):
+    Literal runs are read inside groups and inside repeats that occur
+    at least once; alternations, classes, optional repeats and
+    assertions end a run and contribute nothing."""
+    tree = _parse(pattern)
+    if tree is None:
         return None
-    cur: list[str] = []
-    i, n = 1, len(pattern)
-    while i < n:
-        c = pattern[i]
-        if c == "\\":
-            if i + 1 >= n:
-                break
-            e = pattern[i + 1]
-            if (
-                e in _CLASS_ESCAPES
-                or e in ("n", "t", "r", "f", "a", "e",
-                         "x", "u", "0", "c", "p", "P", "k", "Q")
-                or e.isdigit()
-            ):
-                break
-            cur.append(e)
-            i += 2
-            continue
-        if c in "([{*+?^$.|":
-            # a quantifier that can make the previous char optional
-            # drops it; dropping is always SAFE (a shorter guaranteed
-            # prefix stays a guaranteed prefix)
-            if c in "*?{" and cur:
-                cur.pop()
-            break
-        cur.append(c)
-        i += 1
-    p = "".join(cur)
-    return p if len(p) >= min_len else None
-
-
-def literal_alternation(pattern: str) -> list[str] | None:
-    """Branch literals of a pattern that is EXACTLY an anchored
-    alternation of plain literals in one capturing group —
-    `^(balanced|balancing|DHCPACK|...)` (the dhcpd request-command
-    shape) — in source order, or None.
-
-    For such a pattern the whole regex engine can be replaced by a
-    first-match CASE over `startswith`: Java alternation tries
-    branches left to right at the anchor, so the first listed branch
-    that prefixes the subject is both the full match and group 1.
-    Nothing may follow the group (backtracking could otherwise retry
-    later branches), and branches must be pure literals."""
-    if not (pattern.startswith("^(") and pattern.endswith(")")):
-        return None
-    body = pattern[2:-1]
-    branches: list[str] = []
-    cur: list[str] = []
-    i, n = 0, len(body)
-    while i < n:
-        c = body[i]
-        if c == "\\":
-            if i + 1 >= n:
-                return None
-            e = body[i + 1]
-            if (
-                e in _CLASS_ESCAPES
-                or e in ("n", "t", "r", "f", "a", "e",
-                         "x", "u", "0", "c", "p", "P", "k", "Q")
-                or e.isdigit()
-            ):
-                return None
-            cur.append(e)
-            i += 2
-        elif c == "|":
-            if not cur:
-                return None
-            branches.append("".join(cur))
-            cur = []
-            i += 1
-        elif c in "()[]{}*+?^$.":
-            return None
-        else:
-            cur.append(c)
-            i += 1
-    if not cur:
-        return None
-    branches.append("".join(cur))
-    return branches if len(branches) >= 2 else None
-
-
-def _skip_quantifier(pattern: str, i: int) -> int:
-    """Skip a quantifier following a group/class (we treated the
-    construct as a run breaker, so the quantifier is irrelevant)."""
-    n = len(pattern)
-    if i < n and pattern[i] in ("*", "+", "?"):
-        return _skip_lazy(pattern, i + 1)
-    if i < n and pattern[i] == "{":
-        j = pattern.find("}", i)
-        if j != -1 and pattern[i + 1 : j].split(",")[0].strip().isdigit():
-            return _skip_lazy(pattern, j + 1)
-    return i
-
-
-def _skip_lazy(pattern: str, i: int) -> int:
-    """Skip a reluctant/possessive marker after a quantifier."""
-    if i < len(pattern) and pattern[i] in ("?", "+"):
-        return i + 1
-    return i
-
-
-def required_literal_py(pattern: str, min_len: int = 3) -> str | None:
-    """`required_literal` for PYTHON-dialect patterns (the interpreter
-    backends run `re`, the vectorized backend runs Java regex — hence
-    two analyzers).  This one walks re's own parse tree, so it is
-    exact on syntax (no mis-decode risk) and finds literals INSIDE
-    groups and min>=1 repeats, which the Java-dialect scanner above
-    conservatively skips: `(?P<h>\\S+) said hello` yields " said hello"
-    here but None above (named groups make it bail)."""
-    import re
-
-    try:
-        import re._parser as sre_parse
-    except ImportError:  # pragma: no cover - Python < 3.11
-        import sre_parse
-
-    try:
-        parsed = sre_parse.parse(pattern)
-    except Exception:
-        return None
-    if parsed.state.flags & re.IGNORECASE:
-        return None
-
     runs: list[str] = []
 
     def walk(seq) -> None:
         cur: list[str] = []
-
-        def flush():
-            if cur:
-                runs.append("".join(cur))
-                cur.clear()
-
         for op, av in seq:
-            name = str(op)
-            if name == "LITERAL":
+            if op is _sre.LITERAL:
                 cur.append(chr(av))
-            elif name == "SUBPATTERN":
-                flush()
-                # av = (group, add_flags, del_flags, subseq); a
-                # (?i:...) group's literals are unreliable - skip it
-                if not (av[1] & re.IGNORECASE):
-                    walk(av[3])
-            elif name in ("MAX_REPEAT", "MIN_REPEAT"):
-                flush()
-                lo, _hi, body = av
-                if lo >= 1:
-                    walk(body)
-            else:
-                # BRANCH, IN, ANY, AT, ASSERT*, GROUPREF, ...: the
-                # run ends; the construct itself guarantees nothing
-                flush()
-        flush()
+                continue
+            runs.append("".join(cur))
+            cur = []
+            if op is _sre.SUBPATTERN and _plain(av):
+                walk(av[3])
+            elif op in _REPEATS and av[0] >= 1:
+                walk(av[2])
+        runs.append("".join(cur))
 
-    walk(parsed)
-    runs = [r for r in runs if len(r) >= min_len]
-    return max(runs, key=len) if runs else None
+    walk(tree)
+    best = max(runs, key=len)
+    return best if len(best) >= min_len else None
+
+
+def required_prefix(pattern: str, min_len: int = 3) -> str | None:
+    """Literal every match of a `^`-anchored pattern starts with, or
+    None.  A stronger reject gate than `required_literal`:
+    `startswith(subj, pref)` is one bounded memcmp where `instr`
+    scans the whole subject.  A top-level alternation is one BRANCH
+    node (after the parser factors out any prefix its branches
+    share), so it ends the prefix like any other non-literal."""
+    tree = _parse(pattern)
+    if (
+        tree is None
+        or tree.state.flags & re.MULTILINE
+        or not len(tree)
+        or tree[0] != (_sre.AT, _sre.AT_BEGINNING)
+    ):
+        return None
+    out: list[str] = []
+
+    def walk(seq) -> bool:
+        """Append seq's guaranteed prefix; True iff seq is all of it."""
+        for op, av in seq:
+            if op is _sre.LITERAL:
+                out.append(chr(av))
+            elif op is _sre.SUBPATTERN and _plain(av):
+                if not walk(av[3]):
+                    return False
+            else:
+                if op in _REPEATS and av[0] >= 1:
+                    walk(av[2])
+                return False
+        return True
+
+    walk(tree[1:])
+    p = "".join(out)
+    return p if len(p) >= min_len else None
+
+
+def literal_alternation(pattern: str) -> list[str] | None:
+    """The strings a pattern of the form `^( ... )` can match, in the
+    order a backtracking engine tries them, when the group is its only
+    capturing group and holds a finite language of non-empty literals
+    (`^(balanced|balancing|DHCPACK|...)`, the dhcpd request-command
+    shape); else None.
+
+    For such a pattern the whole regex engine can be replaced by a
+    first-match CASE over `startswith`: alternation is leftmost-first,
+    so the first listed string that prefixes the subject is the full
+    match and group 1.  Nothing may follow the group, or backtracking
+    could go on to later strings."""
+    tree = _parse(pattern)
+    if (
+        tree is None
+        or tree.state.flags & re.MULTILINE
+        or tree.state.groups != 2
+        or len(tree) != 2
+        or tree[0] != (_sre.AT, _sre.AT_BEGINNING)
+        or tree[1][0] is not _sre.SUBPATTERN
+        or not _plain(tree[1][1])
+    ):
+        return None
+
+    def language(seq) -> list[str] | None:
+        words = [""]
+        for op, av in seq:
+            if op is _sre.LITERAL:
+                alts = [chr(av)]
+            elif op is _sre.IN and all(o is _sre.LITERAL for o, _ in av):
+                alts = [chr(v) for _, v in av]
+            elif op is _sre.BRANCH:
+                alts = []
+                for branch in av[1]:
+                    sub = language(branch)
+                    if sub is None:
+                        return None
+                    alts += sub
+            elif op is _sre.SUBPATTERN and av[0] is None and _plain(av):
+                alts = language(av[3])
+                if alts is None:
+                    return None
+            else:
+                return None
+            words = [w + a for w in words for a in alts]
+            if len(words) > _MAX_WORDS:
+                return None
+        return words
+
+    words = language(tree[1][1][3])
+    if words is None or len(words) < 2 or "" in words:
+        return None
+    return words

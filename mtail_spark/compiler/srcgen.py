@@ -235,7 +235,7 @@ class _Gen:
     def match_var(self, rid: int) -> str:
         """Evaluate regex `rid` against its subject (or the line),
         record in rt.matches, return the local holding the match.
-        A required-literal `in` prefilter (interp.required_literal)
+        A required-literal `in` prefilter (literals.required_literal)
         skips the regex engine when the search provably fails."""
         reg = self.prog.regexes[rid]
         lit = self.it.re_lit.get(rid)

@@ -118,26 +118,6 @@ def _sql_dot_lits(vec: str, weights: list[float]) -> str:
     ) + ")"
 
 
-def _sql_sqdist_lits(vec: str, center: list[float]) -> str:
-    terms = []
-    for i, v in enumerate(center, start=1):
-        d = f"(CAST(element_at({vec}, {i}) AS DOUBLE) - {_dlit(v)})"
-        terms.append(f"({d} * {d})")
-    return "(" + " + ".join(terms) + ")"
-
-
-def _dot_lits(vec: str, weights: list[float]) -> Column:
-    """Dot of an array column (by NAME) with plan-time literal weights
-    (same left-fold order as the HOF form)."""
-    return F.expr(_sql_dot_lits(vec, weights))
-
-
-def _sqdist_lits(vec: str, center: list[float]) -> Column:
-    """Squared euclidean distance of an array column (by NAME) to a
-    literal centroid (left-fold order preserved)."""
-    return F.expr(_sql_sqdist_lits(vec, center))
-
-
 def knn_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -439,18 +419,6 @@ def probe_lists_udf(centroids: list[list[float]], n_probe: int):
     return F.pandas_udf(probe, "array<int>")
 
 
-def _nearest_centroid(vec: str, centroids: list[list[float]]) -> Column:
-    """Pure-JVM first-occurrence argmin (one F.expr) — kept for plan
-    contexts that must avoid Python workers; hot paths use
-    nearest_centroid_udf."""
-    ds = "array(" + ", ".join(
-        _sql_sqdist_lits(vec, cen) for cen in centroids
-    ) + ")"
-    return F.expr(
-        f"CAST(array_position({ds}, array_min({ds})) AS INT) - 1"
-    )
-
-
 def knn_ivf(
     corpus: DataFrame,
     queries: DataFrame,
@@ -541,19 +509,6 @@ def _ivf_rerank(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "corpus_id", "cos_sim", "rank")
-    )
-
-
-def _probe_lists(vec: str, centroids: list[list[float]], n_probe: int) -> Column:
-    """n_probe nearest list ids for an array column (by NAME), via
-    array_sort over (distance, index) structs — one F.expr."""
-    dists = "array(" + ", ".join(
-        f"named_struct('d', {_sql_sqdist_lits(vec, cen)}, "
-        f"'i', CAST({i} AS INT))"
-        for i, cen in enumerate(centroids)
-    ) + ")"
-    return F.expr(
-        f"transform(slice(array_sort({dists}), 1, {n_probe}), s -> s.i)"
     )
 
 

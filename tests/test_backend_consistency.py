@@ -203,7 +203,8 @@ def test_postfix_synthetic(spark):
     assert count == 1 and abs(total - 0.19) < 1e-12
 
 
-def test_remaining_examples_execute_vectorized(spark):
+@requires_reference
+def test_reference_examples_execute_vectorized(spark):
     """Every vectorizable example program at least executes end-to-end
     on arbitrary lines (zero-init outputs for scalar counters)."""
     lines = ["nothing to see here", "42 and more"]

@@ -247,8 +247,11 @@ def test_audit_falls_back_on_disorder(spark, tmp_path, monkeypatch):
 def test_txn_demo_through_chunkfold(spark, monkeypatch):
     """The oracle-checked txn demo program (scalar text/gauge
     registers, self-cycle, register-read metric label) must produce
-    the identical store through chunkfold — this is the program the
-    sf1 bench routes through the chunkfold backend."""
+    the identical store through chunkfold and the vectorized plan —
+    chunkfold is the backend the sf1 bench routes it through.  The
+    stores agree row for row, labels included: the unlabelled
+    metrics (commits_total, skipped_commits) carry an empty map
+    everywhere, never NULL."""
     from mtail_spark.plans.demo_programs import (
         TXN_PROG,
         render_txn_lines,
@@ -258,9 +261,20 @@ def test_txn_demo_through_chunkfold(spark, monkeypatch):
     assert prog.chunkfoldable
     df = render_txn_lines(spark, "/root/testdata/sf0.001")
     monkeypatch.setattr(CF, "CHUNK_LINES", 211)
-    a = _run(spark, prog, df, "fold")
-    b = _run(spark, prog, df, "chunkfold")
-    assert a == b
+    stores = {}
+    for backend in ("fold", "chunkfold", "vector"):
+        out = prog.run_batch(spark, df, backend=backend, cache_plan=False)
+        rows = out.collect()
+        cache = getattr(out, "_chunkfold_cache", None)
+        if cache is not None:
+            cache.unpersist()
+        assert all(r["labels"] is not None for r in rows), backend
+        stores[backend] = {
+            (r["name"], tuple(sorted(r["labels"].items()))): r
+            for r in rows
+        }
+    assert stores["fold"] == stores["chunkfold"] == stores["vector"]
+    assert stores["vector"][("commits_total", ())]["labels"] == {}
 
 
 # ----------------------------------------------------- golden parity

@@ -9,10 +9,12 @@ import pytest
 from mtail_spark.compiler.checker import CheckError, check, infer_group_type
 from mtail_spark.compiler.lexer import Lexer
 from mtail_spark.compiler.parser import ParseError, parse
+from tests.conftest import requires_reference
 
 EXAMPLES = sorted(glob.glob("/root/reference/examples/*.mtail"))
 
 
+@requires_reference
 @pytest.mark.parametrize(
     "path", EXAMPLES, ids=[p.split("/")[-1] for p in EXAMPLES]
 )

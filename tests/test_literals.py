@@ -1,14 +1,18 @@
-"""required_literal: the prefilter may only ever claim a literal that
-truly appears in every match (false None is fine; false literal loses
-lines)."""
+"""Literal gates (compiler/literals.py): a gate may only ever claim
+what holds for every match (a false None is fine; a false literal
+loses lines)."""
 
+import itertools
+import random
 import re
 
 import pytest
 
+from mtail_spark.compiler.checker import translate_regex
 from mtail_spark.compiler.literals import (
+    literal_alternation,
     required_literal,
-    required_literal_py,
+    required_prefix,
 )
 from tests.conftest import requires_reference
 
@@ -112,8 +116,7 @@ def test_sound_on_reference_examples():
 
 
 PY_CASES = [
-    # Python-dialect analyzer: recurses into named groups and min>=1
-    # repeats, so it claims literals the Java-dialect scanner can't
+    # the tree walk reads inside named groups and min>=1 repeats
     (r"(?P<h>\S+) said hello", " said hello"),
     (r"DHCPACK on (?P<ip>\S+) to (?P<mac>\S+)", "DHCPACK on "),
     (r"(foo|bar) baz", " baz"),
@@ -131,13 +134,13 @@ PY_CASES = [
 
 @pytest.mark.parametrize("pat,want", PY_CASES)
 def test_py_expected(pat, want):
-    assert required_literal_py(pat) == want
+    assert required_literal(pat) == want
 
 
 @requires_reference
 def test_py_sound_on_reference_examples():
-    """Soundness of the Python-dialect analyzer on every pattern in
-    the reference examples: any line of the matching golden log that
+    """Soundness of the translated patterns' literals on every pattern
+    in the reference examples: any line of the matching golden log that
     the regex matches must contain the claimed literal."""
     import glob
 
@@ -148,12 +151,12 @@ def test_py_sound_on_reference_examples():
     ]
     for path in glob.glob("/root/reference/examples/*.mtail"):
         for m in re.finditer(r"/((?:[^/\\\n]|\\.)+)/", open(path).read()):
-            raw = m.group(1).replace("\\/", "/")
+            raw = translate_regex(m.group(1).replace("\\/", "/"))
             try:
                 rx = re.compile(raw)
             except re.error:
                 continue
-            lit = required_literal_py(raw)
+            lit = required_literal(raw)
             if lit is None:
                 continue
             claimed += 1
@@ -166,12 +169,7 @@ def test_py_sound_on_reference_examples():
     assert checked >= 100, checked  # and the soundness check had teeth
 
 
-# ------------------------- round-13: anchored prefix / literal alternation
-
-from mtail_spark.compiler.literals import (  # noqa: E402
-    literal_alternation,
-    required_prefix,
-)
+# ------------------------------ anchored prefix / literal alternation
 
 PREFIX_CASES = [
     (r"^DHCPDISCOVER from (\S+)", "DHCPDISCOVER from "),
@@ -183,6 +181,8 @@ PREFIX_CASES = [
     (r"abc", None),           # unanchored
     (r"^(\S+) BEGIN", None),  # prefix starts with a group
     ("^ab", "ab"),            # min_len handled separately
+    (r"^abc|def", None),      # the anchor binds the first branch only
+    (r"^abc|^abd", "ab"),     # the prefix both branches share
 ]
 
 
@@ -205,6 +205,7 @@ def test_required_prefix_sound():
         for line in (
             "DHCPDISCOVER from aa:bb", "abd x", "abbd x", "ad x",
             "abc x", "ab.cd efg!", "no match at all", "", "a", "ab",
+            "xx def",
         ):
             m = rx.search(line)
             if m:
@@ -223,7 +224,7 @@ ALT_CASES = [
     ("(foo|bar)", None),        # unanchored
     ("^(a\\|b|c)", ["a|b", "c"]),
     ("^(foo)", None),           # single branch: no win
-    ("^(fo(o|z))", None),       # nested group
+    ("^(fo(o|z))", None),       # a second capturing group
 ]
 
 
@@ -245,3 +246,80 @@ def test_literal_alternation_first_match_semantics():
         m = rx.search(s)
         case = next((a for a in alts if s.startswith(a)), None)
         assert (m.group(1) if m else None) == case, s
+
+
+# ------------------------------------------------- soundness fuzz
+
+_ATOMS = ["a", "b", "c", "x", "1", "ab", "abc", r"\d", ".", "[ab]",
+          "[^a]", r"\w", r"[\dx]"]
+_QUANT = ["?", "*", "+", "{0,2}", "{1,2}", "+?"]
+
+
+def _seq(rng, depth):
+    out = []
+    for _ in range(rng.randint(1, 4)):
+        if depth < 2 and rng.random() < 0.2:
+            item = rng.choice(["(", "(?:"]) + _alt(rng, depth + 1) + ")"
+        else:
+            item = rng.choice(_ATOMS)
+        if rng.random() < 0.25:
+            item += rng.choice(_QUANT)
+        out.append(item)
+    return "".join(out)
+
+
+def _alt(rng, depth):
+    return "|".join(_seq(rng, depth) for _ in range(rng.randint(1, 3)))
+
+
+def _literal_group(rng, depth=0):
+    """`a|ab|(?:b|c)x` shapes: what literal_alternation accepts."""
+    branches = []
+    for _ in range(rng.randint(1, 3)):
+        parts = [rng.choice(["a", "b", "ab", "ba", "x1", "c"])]
+        if depth < 1 and rng.random() < 0.3:
+            parts.append("(?:" + _literal_group(rng, depth + 1) + ")")
+        branches.append("".join(parts))
+    return "|".join(branches)
+
+
+def _pattern(rng):
+    if rng.random() < 0.3:
+        return "^(" + _literal_group(rng) + ")"
+    return (
+        rng.choice(["", "", "^"]) + _alt(rng, 0) + rng.choice(["", "", "$"])
+    )
+
+
+def test_gates_sound_on_every_short_subject():
+    """Seeded fuzz of all three gates over the translated patterns:
+    for every subject of up to 5 characters over `abcx1`, a match
+    must contain the required literal and start with the required
+    prefix, and the first-match CASE over the literal alternation
+    must give the regex's group 1."""
+    rng = random.Random(11)
+    subjects = [
+        "".join(t) for n in range(6)
+        for t in itertools.product("abcx1", repeat=n)
+    ]
+    fired = {"lit": 0, "pref": 0, "alt": 0}
+    for _ in range(300):
+        pat = translate_regex(_pattern(rng))
+        rx = re.compile(pat)
+        lit = required_literal(pat, min_len=1)
+        pref = required_prefix(pat, min_len=1)
+        alts = literal_alternation(pat)
+        fired["lit"] += lit is not None
+        fired["pref"] += pref is not None
+        fired["alt"] += alts is not None
+        for s in subjects:
+            m = rx.search(s)
+            if alts is not None:
+                case = next((a for a in alts if s.startswith(a)), None)
+                assert (m and m.group(1)) == case, (pat, alts, s)
+            if m is None:
+                continue
+            assert lit is None or lit in s, (pat, lit, s)
+            assert pref is None or s.startswith(pref), (pat, pref, s)
+    # every gate fired often enough for the sweep to have teeth
+    assert min(fired.values()) >= 20, fired

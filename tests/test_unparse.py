@@ -12,11 +12,13 @@ import pytest
 
 from mtail_spark.compiler.api import compile_program
 from mtail_spark.compiler.unparse import dot_source, format_source
+from tests.conftest import requires_reference
 
 EX = "/root/reference/examples"
 EXAMPLES = sorted(glob.glob(f"{EX}/*.mtail"))
 
 
+@requires_reference
 @pytest.mark.parametrize(
     "path", EXAMPLES, ids=[os.path.basename(p) for p in EXAMPLES]
 )
@@ -39,6 +41,7 @@ def test_format_roundtrip(path):
     assert fmt.run_local(lines) == orig.run_local(lines), name
 
 
+@requires_reference
 @pytest.mark.parametrize(
     "path", EXAMPLES[:4], ids=[os.path.basename(p) for p in EXAMPLES[:4]]
 )
