@@ -14,6 +14,7 @@ import os
 import pytest
 
 from mtail_spark.compiler.api import compile_program
+from mtail_spark.plans import demo_programs
 from mtail_spark.store import diff_stores, rows_from_df
 from tests.conftest import requires_reference
 
@@ -203,17 +204,30 @@ def test_postfix_synthetic(spark):
     assert count == 1 and abs(total - 0.19) < 1e-12
 
 
-@requires_reference
-def test_reference_examples_execute_vectorized(spark):
-    """Every vectorizable example program at least executes end-to-end
-    on arbitrary lines (zero-init outputs for scalar counters)."""
+def test_remaining_examples_execute_vectorized(spark):
+    """Every example program at least executes end-to-end on arbitrary
+    lines (zero-init outputs for scalar counters): the demo programs
+    shipped in the package always, and the reference examples when that
+    checkout is present."""
     lines = ["nothing to see here", "42 and more"]
-    for path in sorted(glob.glob(f"{EX}/*.mtail")):
-        name = os.path.basename(path)
-        prog = compile_program(open(path).read(), name)
-        df = _lines_df(spark, lines)
-        rows = prog.run_batch(spark, df).collect()
+    # demo program -> its unlabelled counters, which must be zero-initialised
+    demos = {
+        "COUNTER_PROG": {"events_total"},
+        "GAUGE_PROG": set(),
+        "HIST_PROG": set(),
+        "STATEFUL_PROG": set(),
+        "TXN_PROG": {"commits_total", "skipped_commits"},
+    }
+    programs = [(f"demo_{n.lower()}.mtail", getattr(demo_programs, n), z) for n, z in demos.items()]
+    programs += [
+        (os.path.basename(p), open(p).read(), set()) for p in sorted(glob.glob(f"{EX}/*.mtail"))
+    ]
+    df = _lines_df(spark, lines)
+    for name, src, zero_init in programs:
+        rows = compile_program(src, name).run_batch(spark, df).collect()
         assert rows is not None, name
+        got = {(r["name"], r["value_i"]) for r in rows if not r["labels"]}
+        assert {(m, 0) for m in zero_init} <= got, (name, got)
 
 
 @requires_reference
