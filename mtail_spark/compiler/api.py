@@ -132,8 +132,13 @@ class CompiledProgram:
     # --override_timezone); None = UTC
     override_timezone: str | None = None
     _vectorizable: bool | None = None
+    _scalar_registers: bool = False
     # Ellipsis = not yet computed; None = chunkfoldable; str = reason not
     _chunkfold_reason: object = Ellipsis
+    # codegen.store_sql's key -> the vectorized store plan's SQL text
+    # (text only: no DataFrame, session or executed state)
+    _store_sql: dict = field(default_factory=dict, repr=False,
+                             compare=False)
     # (backend, now_us, flags, session token, input-plan semanticHash,
     # file-listing fingerprint) -> analyzed store DataFrame.
     # Re-running a program over the same input relation skips the
@@ -157,12 +162,20 @@ class CompiledProgram:
                 Vectorizer,
             )
 
+            vz = Vectorizer(self.checked)
             try:
-                Vectorizer(self.checked).compile()
+                vz.compile()
                 self._vectorizable = True
             except VectorizeError:
                 self._vectorizable = False
+            self._scalar_registers = bool(vz.scalar_strata)
         return self._vectorizable
+
+    @property
+    def scalar_registers(self) -> bool:
+        """True when the vectorized plan carries scalar registers as
+        window columns over each file's line order."""
+        return self.vectorizable and self._scalar_registers
 
     @property
     def exported_kinds(self) -> frozenset:

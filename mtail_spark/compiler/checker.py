@@ -82,6 +82,17 @@ def _code_point(c: int) -> str:
     return ch
 
 
+def _hex_escape(esc: str) -> str:
+    """RE2's \\x{hex} as the code point itself, in text both engines
+    read; any other escape unchanged (an empty or out-of-range
+    \\x{...} is left for re.compile to reject, as RE2 does)."""
+    if esc.startswith("\\x{") and len(esc) > 4:
+        c = int(esc[3:-1], 16)
+        if c <= 0x10FFFF:
+            return _code_point(c)
+    return esc
+
+
 def _class_body(ranges, negate: bool = False) -> str:
     """Ranges as class-body text, or their complement over all of
     Unicode when `negate` (a \\D inside [...] cannot be a [^...])."""
@@ -105,7 +116,7 @@ def _class_char(p: str, j: int) -> tuple[str, int]:
     class union and intersection)."""
     if p[j] == "\\" and j + 1 < len(p):
         m = _ESCAPE.match(p, j)
-        return (r"\x0b" if m[0] == r"\v" else m[0]), m.end()
+        return (r"\x0b" if m[0] == r"\v" else _hex_escape(m[0])), m.end()
     if p[j] in "[]^-&":
         return "\\" + p[j], j + 1
     return p[j], j + 1
@@ -156,7 +167,10 @@ def translate_regex(pattern: str) -> str:
       and \\z the end of text only, and under (?m) `^` `$` break at
       \\n only;
     - inside classes [ & ^ - ] are escaped, and a { that cannot start
-      a repeat is a literal, as in RE2.
+      a repeat is a literal, as in RE2;
+    - \\x{hex} becomes its code point, inside [...] too, and the text
+      of \\Q...\\E one escaped literal per character (RE2 allows
+      \\Q only outside classes).
     The (?P<name>) syntax is shared by RE2 and Python; the Spark
     backend strips names (Java group-name charset is narrower)."""
     out = []
@@ -168,14 +182,19 @@ def translate_regex(pattern: str) -> str:
             m = _ESCAPE.match(pattern, i)
             e = m[0][1]
             i = m.end()
-            if e.lower() in ("d", "s", "w"):
+            if e == "Q":
+                end = pattern.find("\\E", i)
+                end = len(pattern) if end < 0 else end
+                out.extend(_code_point(ord(ch)) for ch in pattern[i:end])
+                i = end + 2
+            elif e.lower() in ("d", "s", "w"):
                 neg = "^" if e.isupper() else ""
                 out.append(f"[{neg}{_class_body(_PERL[e.lower()])}]")
             else:
                 out.append({
                     "b": _BOUNDARY, "B": _NOT_BOUNDARY, "z": _END,
                     "v": r"\x0b",
-                }.get(e, m[0]))
+                }.get(e, _hex_escape(m[0])))
         elif c == "[":
             i = _translate_class(pattern, i, out)
         elif c in ".$^":

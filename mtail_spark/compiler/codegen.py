@@ -14,19 +14,19 @@ internal/runtime/vm/vm.go:336-958), the whole program becomes:
    aggregate in a single pass — sum for counters, max_by(line order)
    for last-write-wins gauges, bucket counts for histograms.  Map-side
    partial aggregation means the exchange carries store-sized data.
-4. Final per-kind assembly happens driver-side: the aggregate is one
-   row per label tuple x bucket — the same fits-in-RAM-store
-   assumption the reference makes (internal/metrics/store.go).
+4. Per-kind assembly into STORE_SCHEMA rows, in the same plan: CASE
+   arms over the metric name carry the compile-time metadata.
 
-Emitting SQL text (not layered Column objects) keeps the logical plan
-a single Project: withColumn cascades at this expression count make
-Catalyst's fixed-point optimizer and task binaries blow up.
+All of it is one SQL text (store_sql), built once per program and
+input shape.  SQL text, not layered Column objects, keeps the logical
+plan a single Project (withColumn cascades at this expression count
+make Catalyst's fixed-point optimizer and task binaries blow up) and
+lets a micro-batch reuse the plan for a few py4j round trips.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from mtail_spark.compiler import ast as A
 from mtail_spark.compiler.checker import CheckedProgram, strip_group_names
@@ -1368,70 +1368,131 @@ def _reg_event_sql(op: _RegOp) -> str:
     return f"CASE WHEN {op.guard} THEN {ev} END"
 
 
-def vectorized_store(
-    compiled, spark: SparkSession, log_lines: DataFrame, now_us: int = 0
-) -> DataFrame:
-    """Run a vectorizable program, returning the STORE_SCHEMA frame."""
+def _sql_double(v: float) -> str:
+    if v == float("inf"):
+        return "CAST('Infinity' AS DOUBLE)"
+    return f"CAST({v!r} AS DOUBLE)"
+
+
+# The update-event relation, and the store it aggregates to:
+# (column, SQL type) in relation order.
+_EVENT_COLS = (
+    ("filename", "STRING"), ("line_no", "BIGINT"), ("site", "INT"),
+    ("labels", "ARRAY<STRING>"), ("vi", "BIGINT"), ("vf", "DOUBLE"),
+    ("vs", "STRING"), ("le", "DOUBLE"), ("ts_us", "BIGINT"),
+    ("name", "STRING"), ("w", "INT"),
+)
+_STORE_COLS = tuple(
+    (f.name, f.dataType.simpleString()) for f in STORE_SCHEMA.fields
+)
+
+
+def _values_sql(rows: list, cols) -> str:
+    """Literal rows (SQL expressions) as a relation, each value cast to
+    its column's type; no rows gives the empty relation."""
+    body = rows or [["NULL"] * len(cols)]
+    vals = ", ".join(
+        "(" + ", ".join(
+            f"CAST({v} AS {t})" for v, (_c, t) in zip(r, cols)
+        ) + ")"
+        for r in body
+    )
+    names = ", ".join(c for c, _t in cols)
+    where = "" if rows else " WHERE FALSE"
+    return f"SELECT * FROM VALUES {vals} AS __z({names}){where}"
+
+
+def _lines_view(compiled) -> str:
+    """Temp view the program's store SQL reads its log lines from."""
+    return f"__mtail_lines_{id(compiled)}"
+
+
+def _dim_registers_sql(vz: Vectorizer, src: str) -> str:
+    """DIMENSIONED cross-line registers: a second event relation
+    carries hidden-metric set/del/read ops; a window per (filename,
+    register, labels) ordered by (line_no, seq) resolves each read to
+    the last prior set (del masks), and the read values pivot to one
+    row per line.  This is the Spark shape for rsyncd-style
+    connection stitching: parallel across register label values
+    instead of sequential per file."""
+    revs = ", ".join(_reg_event_sql(op) for op in vz.dim_regops)
+    carry_col = {"Int": "cvi", "Float": "cvf"}
+    reads = ", ".join(
+        f"max(CASE WHEN read_id = {rop.read_id} THEN "
+        f"{carry_col.get(rop.metric.vtype, 'cvs')} END)"
+        f" AS __reg_r{rop.read_id}"
+        for rop in vz.dim_reads
+    )
+    ops = (
+        "SELECT filename, line_no, e.reg AS reg, e.seq AS seq, "
+        "e.kind AS kind, e.read_id AS read_id, e.labels AS labels, "
+        "e.vi AS vi, e.vf AS vf, e.vs AS vs FROM ("
+        "SELECT filename, line_no, explode_outer(revs) AS e FROM ("
+        f"SELECT filename, line_no, array({revs}) AS revs FROM {src}"
+        ") AS __rf) AS __rx WHERE e IS NOT NULL"
+    )
+    carried = (
+        "SELECT *, last(CASE WHEN kind <= 1 THEN struct(kind, vi, vf, vs)"
+        " END, true) OVER (PARTITION BY filename, reg, labels "
+        "ORDER BY line_no, seq "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS c "
+        f"FROM ({ops}) AS __ro"
+    )
+    return (
+        f"SELECT filename, line_no, {reads} FROM ("
+        "SELECT filename, line_no, read_id, "
+        "CASE WHEN c.kind = 0 THEN c.vi END AS cvi, "
+        "CASE WHEN c.kind = 0 THEN c.vf END AS cvf, "
+        "CASE WHEN c.kind = 0 THEN c.vs END AS cvs "
+        f"FROM ({carried}) AS __rc WHERE kind = 2"
+        ") AS __rr GROUP BY filename, line_no"
+    )
+
+
+def store_sql(compiled, now_us: int, tz: str | None, single_file: bool,
+              chunked: bool) -> str:
+    """The whole store plan of a vectorizable program as ONE SQL text
+    over the temp view `_lines_view(compiled)` of its log lines.
+
+    Every parameter is something the text depends on: `now_us` feeds
+    timestamp()'s fallback and --syslog_use_current_year's year, `tz`
+    zone-less strptime, `single_file` drops the cross-file merge
+    level, and `chunked` picks the chunk-parallel scalar-register
+    scan."""
     prog = compiled.checked
     syslog_year = None
-    if getattr(compiled, "syslog_use_current_year", False):
+    if compiled.syslog_use_current_year:
         from mtail_spark.compiler.gotime import epoch_us_year
 
         syslog_year = epoch_us_year(now_us)
-    vz = Vectorizer(
-        prog, now_us=now_us, syslog_year=syslog_year,
-        tz=getattr(compiled, "override_timezone", None),
-    )
+    vz = Vectorizer(prog, now_us=now_us, syslog_year=syslog_year, tz=tz)
     vz.compile()
-
-    site_meta = {
-        s.seq: (s.metric.decl.exported_name or s.metric.name, s.metric, s.op)
-        for s in vz.sites
+    view = _lines_view(compiled)
+    exported = {
+        mi.decl.exported_name or n: mi
+        for n, mi in prog.metrics.items() if not mi.decl.hidden
     }
-
-    # Scalar-register programs route by input size: big inputs take
-    # the chunk-parallel prefix scan (their parallelism comes from the
-    # chunk exchange — a second raw shuffle would be pure waste),
-    # small inputs and micro-batches (size unknown -> None) keep the
-    # cheaper per-file window.
-    chunk_registers = False
-    if vz.scalar_strata:
-        from mtail_spark.session import estimated_local_input_bytes
-
-        nbytes = estimated_local_input_bytes(log_lines)
-        chunk_registers = nbytes is not None and nbytes > 64 * 1024 * 1024
-
-    # The per-line work (regex extraction, strptime, typed casts) is
-    # CPU-heavy, so parallelism must match the cluster even when the
-    # source planned few splits.  Order is carried as data
-    # (filename, line_no), so the repartition is semantics-preserving;
-    # streaming micro-batch frames are left alone.
-    if not chunk_registers:
-        from mtail_spark.session import ensure_parallelism
-
-        log_lines = ensure_parallelism(log_lines, spark)
-
-    agg_rows = []
+    hidden = [
+        sq(mi.decl.exported_name or n)
+        for n, mi in prog.metrics.items() if mi.decl.hidden
+    ]
+    ctes = []
+    events = []
     if vz.sites:
-        ev_sqls = [_event_sql(s, s.metric.vtype) for s in vz.sites]
         # plain array with NULL slots for unfired sites; nulls are
         # dropped AFTER explode.  (array_filter with a lambda is a
         # CodegenFallback expression — using it here forced the whole
         # projection into interpreted evaluation and disabled
         # subexpression elimination of the shared regex calls.)
-        evs = f"array({', '.join(ev_sqls)})"
-        view = f"__mtail_lines_{abs(id(vz)) % 10**9}"
-        # use the input frame's own session: under foreachBatch the
-        # batch DataFrame belongs to a cloned micro-batch session whose
-        # temp views the outer session cannot see
-        sess = log_lines.sparkSession
-        log_lines.createOrReplaceTempView(view)
+        evs = "array(" + ", ".join(
+            _event_sql(s, s.metric.vtype) for s in vz.sites
+        ) + ")"
         # Scalar registers resolve as window-column layers on the line
         # relation itself (see _plan_registers / scalar_layers_sql).
         # Big inputs: raw lines are chunk-partitioned once, regex
         # extraction runs above that exchange, and every stratum's
         # carry windows share the same distribution.
-        if chunk_registers:
+        if chunked:
             src = vz.scalar_layers_sql(
                 vz.shared_layers_sql(vz.chunked_base_sql(view))
             )
@@ -1439,398 +1500,256 @@ def vectorized_store(
             src = vz.scalar_layers_sql(
                 vz.shared_layers_sql(view), chunked=False
             )
-        pviews = []
         if vz.dim_regops:
-            # DIMENSIONED cross-line registers: a second event relation
-            # carries hidden-metric set/del/read ops; a window per
-            # (filename, register, labels) ordered by (line_no, seq)
-            # resolves each read to the last prior set (del masks),
-            # and the read values join back per line.  This is the
-            # Spark shape for rsyncd-style connection stitching:
-            # parallel across register label values instead of
-            # sequential per file.
-            from pyspark.sql import Window as _W
-
-            revs = (
-                "array("
-                + ", ".join(_reg_event_sql(op) for op in vz.dim_regops)
-                + ")"
-            )
-            reg_flat = sess.sql(
-                f"SELECT filename, line_no, {revs} AS revs FROM {src}"
-            )
-            R = (
-                reg_flat.select(
-                    "filename", "line_no",
-                    F.explode_outer("revs").alias("e"),
-                )
-                .filter(F.col("e").isNotNull())
-                .select(
-                    "filename", "line_no", "e.reg", "e.seq", "e.kind",
-                    "e.read_id", "e.labels", "e.vi", "e.vf", "e.vs",
-                )
-            )
-            w = (
-                _W.partitionBy("filename", "reg", "labels")
-                .orderBy("line_no", "seq")
-                .rowsBetween(_W.unboundedPreceding, -1)
-            )
-            carried = F.last(
-                F.when(
-                    F.col("kind") <= 1, F.struct("kind", "vi", "vf", "vs")
-                ),
-                ignorenulls=True,
-            ).over(w)
-            reads_df = (
-                R.withColumn("c", carried)
-                .filter(F.col("kind") == 2)
-                .select(
-                    "filename", "line_no", "read_id",
-                    F.when(F.col("c.kind") == 0, F.col("c.vi")).alias("cvi"),
-                    F.when(F.col("c.kind") == 0, F.col("c.vf")).alias("cvf"),
-                    F.when(F.col("c.kind") == 0, F.col("c.vs")).alias("cvs"),
-                )
-            )
-            aggs = []
-            for rop in vz.dim_reads:
-                col = {"Int": "cvi", "Float": "cvf"}.get(
-                    rop.metric.vtype, "cvs"
-                )
-                aggs.append(
-                    F.max(
-                        F.when(
-                            F.col("read_id") == rop.read_id, F.col(col)
-                        )
-                    ).alias(f"__reg_r{rop.read_id}")
-                )
-            piv = reads_df.groupBy("filename", "line_no").agg(*aggs)
-            pview = f"__mtail_regs_{abs(id(vz)) % 10**9}"
-            piv.createOrReplaceTempView(pview)
-            pviews.append(pview)
-            flat = sess.sql(
+            ctes.append(f"__regs AS ({_dim_registers_sql(vz, src)})")
+            flat = (
                 f"SELECT t.filename, t.line_no, {evs} AS evs "
-                f"FROM (SELECT * FROM {src}) AS t LEFT JOIN {pview} p "
-                f"ON t.filename = p.filename AND t.line_no = p.line_no"
+                f"FROM (SELECT * FROM {src}) AS t LEFT JOIN __regs p "
+                "ON t.filename = p.filename AND t.line_no = p.line_no"
             )
         else:
-            flat = sess.sql(
-                f"SELECT filename, line_no, {evs} AS evs FROM {src}"
-            )
-
+            flat = f"SELECT filename, line_no, {evs} AS evs FROM {src}"
         # explode_OUTER, not explode: GenerateExec's whole-stage
         # codegen inlines the (large) generator expression tree into
         # the consuming code, re-evaluating the fused projection per
         # output — measured ~10x slower on this shape.  outer=true
         # routes to the row-at-a-time GenerateExec, which evaluates
-        # the event array once per line.  (The r1 design worked
-        # around the same pathology with a persist() of the event
-        # array, paying ~10 us/line of columnar-cache build tax per
-        # run; this shape needs no barrier at all.)  Null slots —
-        # and the extra null row outer emits for all-null lines —
-        # are dropped by the filter.
-        events = (
-            flat.select(
-                "filename", "line_no", F.explode_outer("evs").alias("e")
-            )
-            .filter(F.col("e").isNotNull())
-            .select(
-                "filename",
-                "line_no",
-                F.col("e.site").alias("site"),
-                F.col("e.labels").alias("labels"),
-                F.col("e.vi").alias("vi"),
-                F.col("e.vf").alias("vf"),
-                F.col("e.vs").alias("vs"),
-                F.col("e.le").alias("le"),
-                F.col("e.ts_us").alias("ts_us"),
-            )
-        )
-        name_col = F.lit(None).cast("string")
-        for seq, (nm, _mi, _op) in site_meta.items():
-            name_col = F.when(F.col("site") == seq, F.lit(nm)).otherwise(
-                name_col
-            )
-        # w=1 marks a real event; synthetic zero-init events carry w=0
-        # so they touch no sum/count while guaranteeing their metric's
-        # group exists (see below)
-        events = events.withColumn("name", name_col).withColumn(
-            "w", F.lit(1)
-        )
-
-        # Zero-init scalar counters + keyless histograms (reference
-        # codegen.go:109-156) enter the stream as IDENTITY EVENTS —
-        # one tiny local-relation row per keyless metric, unioned
-        # after the explode.  vi/vf are the additive identity (0) at
-        # epoch ts 0 with order2 below any real line, so a touched
-        # metric's sums and last-write timestamps are unchanged while
-        # an untouched one still yields its zero row.  This needs no
-        # second plan branch (an anti-join re-executed the whole
-        # scan+regex+explode upstream) and no window pass: the union
-        # flows into the same aggregation.
-        zero_ev = []
-        for mname, mi in prog.metrics.items():
-            if mi.decl.hidden or mi.decl.keys:
-                continue
-            nm = mi.decl.exported_name or mname
-            if mi.decl.kind == "counter":
-                # ts_us NULL, not 0: year-0 syslog timestamps are
-                # NEGATIVE epoch micros, so a literal 0 would win the
-                # cross-file max over real writes.  The untouched
-                # counter's epoch-0 timestamp is reconstructed in the
-                # final select from n_obs == 0.
-                zero_ev.append((
-                    "", -1, -1, [],
-                    0 if mi.vtype != "Float" else None,
-                    0.0 if mi.vtype == "Float" else None,
-                    None, None, None, nm, 0,
-                ))
-            elif mi.decl.kind == "histogram":
-                zero_ev.append((
-                    "", -1, -1, [], None, None, None, None, None, nm, 0,
-                ))
-        if zero_ev:
-            events = events.unionByName(
-                sess.createDataFrame(zero_ev, schema=events.schema)
-            )
-
-        # Two-phase aggregation; within a file the last PROCESSED
-        # write wins ((line_no, site) packed into one BIGINT order),
-        # across files the datum with the latest (ts, filename) wins —
-        # exactly the fold backend's merge_partial_stores semantics
-        # (api.py), so multi-file results are deterministic and
-        # backend-independent.  line_no restarts per file, so a single
-        # cross-file max_by(line_no) would be arbitrary.
-        #
-        # Every stage-A aggregate is a PRIMITIVE max_by/sum: a group
-        # holds one metric's events only, so the last-write fields can
-        # be picked per column (all max_bys share the same unique
-        # ordering and therefore the same row) instead of via one
-        # max_by(struct(...)) — whose non-mutable buffer forced
-        # SortAggregate over the full event stream (measured ~2x the
-        # agg cost in r3).  A string buffer column (lvs) only enters
-        # when the program has a String-typed metric.
-        n_span = 1 << max(6, (max(s.seq for s in vz.sites) + 1)
-                          .bit_length())
-        order2 = F.col("line_no") * n_span + F.col("site")
-        has_text = any(s.metric.vtype == "String" for s in vz.sites)
-        # last-write columns only exist when the program has
-        # last-write metrics: stage B's cross-file pick orders by a
-        # struct, whose non-mutable buffer plans SortAggregate — free
-        # on the store-sized stage B, but pure waste for counter-only
-        # programs (dhcpd), which stay all-primitive HashAggregate
-        has_lww = any(
-            s.metric.decl.kind not in ("counter", "histogram")
+        # the event array once per line.  Null slots — and the extra
+        # null row outer emits for all-null lines — are dropped by
+        # the filter.  w=1 marks a real event.
+        names = " ".join(
+            f"WHEN {s.seq} THEN "
+            f"{sq(s.metric.decl.exported_name or s.metric.name)}"
             for s in vz.sites
         )
-        all_bounds = sorted({
-            m
-            for mi in (s.metric for s in vz.sites)
-            if mi.decl.kind == "histogram"
-            for m in _bucket_maxes(mi)
-        })
-        from mtail_spark.sources.logs import is_single_file_relation
-
-        if is_single_file_relation(log_lines):
-            # ONE verifiable file (literal filename or a single-file
-            # read): the cross-file merge level is the identity, so
-            # the whole store collapses to a single aggregation —
-            # order2 is file-wide unique, last-write picks and bucket
-            # pivots happen directly, and the plan drops one exchange
-            # and two HashAggregates.  Every primitive here composes
-            # to exactly stage A∘B below (sums associative; max_by
-            # over one file == stage A's pick, stage B's one-row merge
-            # the identity; zero-init events carry w=0/order2<0 so
-            # they can never win a pick or perturb a sum).
-            aggs_s = [
-                F.sum("vi").alias("sum_i"),
-                F.sum("vf").alias("sum_f"),
-                F.sum("w").alias("n_obs"),
-                F.max_by("ts_us", order2).alias("last_ts"),
-            ]
-            if has_lww:
-                aggs_s.append(F.max_by("vi", order2).alias("lvi"))
-                aggs_s.append(F.max_by("vf", order2).alias("lvf"))
-            if has_text:
-                aggs_s.append(F.max_by("vs", order2).alias("lvs"))
-            for k, b in enumerate(all_bounds):
-                aggs_s.append(
-                    F.sum(
-                        F.when(F.col("le") == F.lit(b), F.col("w"))
-                    ).alias(f"__b{k}")
-                )
-            final = events.groupBy("name", "labels").agg(*aggs_s)
-        else:
-            aggs_a = [
-                F.sum("vi").alias("sum_i"),
-                F.sum("vf").alias("sum_f"),
-                F.sum("w").alias("n_obs"),
-                F.max_by("ts_us", order2).alias("last_ts"),
-            ]
-            if has_lww:
-                aggs_a.append(F.max_by("vi", order2).alias("lvi"))
-                aggs_a.append(F.max_by("vf", order2).alias("lvf"))
-            if has_text:
-                aggs_a.append(F.max_by("vs", order2).alias("lvs"))
-            per_file = events.groupBy(
-                "name", "labels", "le", "filename"
-            ).agg(*aggs_a)
-
-            # Stage B merges files AND a histogram's per-le rows in
-            # one store-sized aggregation: bucket counts come out as
-            # one conditional sum per distinct compile-time bucket
-            # bound, so no per-le grouping level and no collected map
-            # is needed.
-            file_ord = F.struct(F.col("last_ts"), F.col("filename"))
-            aggs_b = [
-                F.sum("sum_i").alias("sum_i"),
-                F.sum("sum_f").alias("sum_f"),
-                F.sum("n_obs").alias("n_obs"),
-                F.max("last_ts").alias("last_ts"),
-            ]
-            if has_lww:
-                aggs_b.append(F.max_by("lvi", file_ord).alias("lvi"))
-                aggs_b.append(F.max_by("lvf", file_ord).alias("lvf"))
-            if has_text:
-                aggs_b.append(F.max_by("lvs", file_ord).alias("lvs"))
-            for k, b in enumerate(all_bounds):
-                aggs_b.append(
-                    F.sum(
-                        F.when(F.col("le") == F.lit(b), F.col("n_obs"))
-                    ).alias(f"__b{k}")
-                )
-            final = per_file.groupBy("name", "labels").agg(*aggs_b)
-
-        for pv in pviews:
-            sess.catalog.dropTempView(pv)
-        sess.catalog.dropTempView(view)
-
-    # ---- Spark-side store assembly (r4).  The r3 design collected the
-    # event aggregate to the driver (Arrow), assembled STORE_SCHEMA
-    # rows in a Python loop, and re-uploaded them via createDataFrame —
-    # a driver round trip measured at ~1.5-2 s per run on a 40k-tuple
-    # store (dhcpd sf0.1).  All of that logic is store-sized relational
-    # work, so it now runs inside the same plan and the caller's
-    # collect reads the result directly: one job, no intermediate
-    # driver materialization.  Metric metadata (kind, vtype, label
-    # keys, bucket bounds) is compile-time constant and enters the
-    # plan as per-name CASE chains over the program's metric names.
-    by_name: dict = {}
-    for seq, (nm, mi, _op) in site_meta.items():
-        by_name[nm] = mi
-
-    _BUCKETS_T = "array<struct<le:double,count:bigint>>"
-
-    def _dispatch(fn, rtype, default="NULL"):
-        """name -> per-metric constant/column, as one CASE chain."""
-        col = F.expr(f"CAST({default} AS {rtype})")
-        for nm, mi in by_name.items():
-            v = fn(nm, mi)
-            if v is not None:
-                col = F.when(F.col("name") == nm, v).otherwise(col)
-        return col
-
-    def _sql_double(v: float) -> str:
-        if v == float("inf"):
-            return "CAST('Infinity' AS DOUBLE)"
-        return f"CAST({v!r} AS DOUBLE)"
-
-    store_df = None
-    if vz.sites:
-        hidden_names = [
-            nm for nm, mi in by_name.items() if mi.decl.hidden
-        ]
-        if hidden_names:
-            final = final.filter(~F.col("name").isin(hidden_names))
-
-        def _labels_map(nm, mi):
-            if not mi.decl.keys:
-                return None
-            return F.map_from_arrays(
-                F.array(*[F.lit(k) for k in mi.decl.keys]),
-                F.col("labels"),
-            )
-
-        def _buckets_col(nm, mi):
-            if mi.decl.kind != "histogram":
-                return None
-            entries = ", ".join(
-                f"named_struct('le', {_sql_double(m)}, 'count', "
-                f"CAST(coalesce(__b{all_bounds.index(m)}, 0) AS BIGINT))"
-                for m in _bucket_maxes(mi)
-            )
-            return F.expr(f"array({entries})")
-
-        is_hist = _dispatch(
-            lambda nm, mi: F.lit(mi.decl.kind == "histogram"), "boolean"
+        events.append(
+            "SELECT filename, line_no, e.site AS site, e.labels AS labels,"
+            " e.vi AS vi, e.vf AS vf, e.vs AS vs, e.le AS le,"
+            f" e.ts_us AS ts_us, CASE e.site {names} END AS name, 1 AS w"
+            " FROM (SELECT filename, line_no, explode_outer(evs) AS e"
+            f" FROM ({flat}) AS __f) AS __x WHERE e IS NOT NULL"
         )
-        is_counter = _dispatch(
-            lambda nm, mi: F.lit(mi.decl.kind == "counter"), "boolean"
-        )
-        vt = _dispatch(lambda nm, mi: F.lit(mi.vtype), "string")
-        lvi_col = F.col("lvi") if has_lww else F.lit(None).cast("bigint")
-        lvf_col = F.col("lvf") if has_lww else F.lit(None).cast("double")
-        lvs_col = F.col("lvs") if has_text else F.lit(None).cast("string")
-        store_df = final.select(
-            F.lit(compiled.name).alias("prog"),
-            F.col("name"),
-            _dispatch(lambda nm, mi: F.lit(mi.decl.kind), "string")
-            .alias("kind"),
-            _dispatch(
-                lambda nm, mi: F.lit(
-                    "Buckets" if mi.decl.kind == "histogram" else mi.vtype
-                ),
-                "string",
-            ).alias("vtype"),
-            # unlabelled metrics carry an empty map, as the folds do
-            _dispatch(_labels_map, "map<string,string>", "map()")
-            .alias("labels"),
-            F.when(is_counter & (vt == "Int"), F.col("sum_i"))
-            .when(~is_counter & ~is_hist, lvi_col)
-            .alias("value_i"),
-            F.when(is_counter & (vt == "Float"), F.col("sum_f"))
-            .when(~is_counter & ~is_hist, lvf_col)
-            .alias("value_f"),
-            F.when(~is_counter & ~is_hist, lvs_col).alias("value_s"),
-            _dispatch(_buckets_col, _BUCKETS_T).alias("buckets"),
-            F.when(is_hist, F.col("n_obs")).alias("bucket_count"),
-            F.when(is_hist, F.coalesce(F.col("sum_f"), F.lit(0.0)))
-            .alias("bucket_sum"),
-            # untouched (zero-init-only) counters carry the epoch-0
-            # timestamp (golden hash requires it); touched metrics
-            # keep the timestamp of their last real write
-            F.when(is_counter & (F.col("n_obs") == 0), F.lit(0))
-            .otherwise(F.col("last_ts"))
-            .alias("ts_us"),
-        )
-        return store_df
 
-    # No update sites at all: the store is just the zero-init rows.
-    zero_rows = []
-    for mname, mi in prog.metrics.items():
-        if mi.decl.hidden or mi.decl.keys:
+    # Zero-init scalar counters + keyless histograms (reference
+    # codegen.go:109-156) enter the stream as IDENTITY EVENTS — one
+    # literal row per keyless metric, unioned after the explode.
+    # vi/vf are the additive identity (0), w=0 and order2 sits below
+    # any real line, so a touched metric's sums and last writes are
+    # unchanged while an untouched one still yields its zero row: no
+    # second plan branch, no window pass.  ts_us is NULL, not 0:
+    # year-0 syslog timestamps are NEGATIVE epoch micros, so a literal
+    # 0 would win the cross-file max over real writes; an untouched
+    # counter's epoch-0 timestamp comes from n_obs == 0 below.
+    zero = []
+    for nm, mi in exported.items():
+        if mi.decl.keys or mi.decl.kind not in ("counter", "histogram"):
             continue
-        nm = mi.decl.exported_name or mname
-        if mi.decl.kind == "counter":
-            zero_rows.append(
-                {
-                    "prog": compiled.name, "name": nm, "kind": "counter",
-                    "vtype": mi.vtype, "labels": {},
-                    "value_i": 0 if mi.vtype != "Float" else None,
-                    "value_f": 0.0 if mi.vtype == "Float" else None,
-                    "value_s": None, "buckets": None, "bucket_count": None,
-                    "bucket_sum": None, "ts_us": 0,
-                }
-            )
-        elif mi.decl.kind == "histogram":
-            zero_rows.append(
-                {
-                    "prog": compiled.name, "name": nm, "kind": "histogram",
-                    "vtype": "Buckets", "labels": {},
-                    "value_i": None, "value_f": None, "value_s": None,
-                    "buckets": [
-                        {"le": mx, "count": 0} for mx in _bucket_maxes(mi)
-                    ],
-                    "bucket_count": 0, "bucket_sum": 0.0, "ts_us": None,
-                }
-            )
-    return spark.createDataFrame(zero_rows, STORE_SCHEMA)
+        is_counter = mi.decl.kind == "counter"
+        zero.append([
+            "''", "-1", "-1", "array()",
+            "0" if is_counter and mi.vtype != "Float" else "NULL",
+            "0.0" if is_counter and mi.vtype == "Float" else "NULL",
+            "NULL", "NULL", "NULL", sq(nm), "0",
+        ])
+    if zero or not events:
+        events.append(_values_sql(zero, _EVENT_COLS))
+    ctes.append(f"__events AS ({' UNION ALL '.join(events)})")
+
+    # Two-phase aggregation; within a file the last PROCESSED write
+    # wins ((line_no, site) packed into one BIGINT order), across
+    # files the datum with the latest (ts, filename) wins — exactly
+    # the fold backend's merge_partial_stores semantics (api.py), so
+    # multi-file results are deterministic and backend-independent.
+    # Every stage-A aggregate is a PRIMITIVE max_by/sum: a group holds
+    # one metric's events only, so the last-write fields are picked
+    # per column (all max_bys share one unique ordering) instead of
+    # via one max_by(struct(...)), whose non-mutable buffer forces
+    # SortAggregate over the full event stream.  Last-write columns
+    # only exist when the program has last-write metrics (lvs only
+    # with a String metric): stage B's pick orders by a struct, which
+    # plans SortAggregate — pure waste for counter-only programs.
+    n_span = 1 << max(6, (max((s.seq for s in vz.sites), default=0) + 1)
+                      .bit_length())
+    order2 = f"line_no * {n_span} + site"
+    has_lww = any(
+        s.metric.decl.kind not in ("counter", "histogram") for s in vz.sites
+    )
+    has_text = any(s.metric.vtype == "String" for s in vz.sites)
+    picks = [("last_ts", "ts_us")]
+    if has_lww:
+        picks += [("lvi", "vi"), ("lvf", "vf")]
+    if has_text:
+        picks.append(("lvs", "vs"))
+    all_bounds = sorted({
+        m for mi in prog.metrics.values() if mi.decl.kind == "histogram"
+        for m in _bucket_maxes(mi)
+    })
+    sums = "sum(vi) AS sum_i, sum(vf) AS sum_f, sum(w) AS n_obs"
+    if single_file:
+        # ONE verifiable file (literal filename or a single-file
+        # read): the cross-file level is the identity, so the store
+        # collapses to a single aggregation — order2 is file-wide
+        # unique, and the plan drops one exchange and two
+        # HashAggregates.  Zero-init events carry w=0 / order2 < 0, so
+        # they never win a pick or perturb a sum.
+        sel = [sums] + [f"max_by({c}, {order2}) AS {a}" for a, c in picks]
+        sel += [
+            f"sum(CASE WHEN le = {_sql_double(b)} THEN w END) AS __b{k}"
+            for k, b in enumerate(all_bounds)
+        ]
+        ctes.append(
+            f"__store AS (SELECT name, labels, {', '.join(sel)} "
+            "FROM __events GROUP BY name, labels)"
+        )
+    else:
+        sel = [sums] + [f"max_by({c}, {order2}) AS {a}" for a, c in picks]
+        ctes.append(
+            f"__per_file AS (SELECT name, labels, le, filename, "
+            f"{', '.join(sel)} FROM __events "
+            "GROUP BY name, labels, le, filename)"
+        )
+        # Stage B merges files AND a histogram's per-le rows in one
+        # store-sized aggregation: one conditional sum per distinct
+        # compile-time bucket bound, no per-le grouping level.
+        sel = [
+            "sum(sum_i) AS sum_i", "sum(sum_f) AS sum_f",
+            "sum(n_obs) AS n_obs", "max(last_ts) AS last_ts",
+        ] + [
+            f"max_by({a}, struct(last_ts, filename)) AS {a}"
+            for a, _c in picks[1:]
+        ] + [
+            f"sum(CASE WHEN le = {_sql_double(b)} THEN n_obs END)"
+            f" AS __b{k}"
+            for k, b in enumerate(all_bounds)
+        ]
+        ctes.append(
+            f"__store AS (SELECT name, labels, {', '.join(sel)} "
+            "FROM __per_file GROUP BY name, labels)"
+        )
+
+    # Store assembly runs inside the same plan: metric metadata
+    # (kind, vtype, label keys, bucket bounds) is compile-time
+    # constant and enters as CASE arms over the metric name.
+    def per_metric(fn, default="NULL"):
+        arms: dict = {}
+        for nm, mi in exported.items():
+            v = fn(mi)
+            if v is not None:
+                arms.setdefault(v, []).append(sq(nm))
+        if not arms:
+            return default
+        return "CASE " + " ".join(
+            f"WHEN name IN ({', '.join(ns)}) THEN {v}"
+            for v, ns in arms.items()
+        ) + f" ELSE {default} END"
+
+    def counter(mi):
+        return mi.decl.kind == "counter"
+
+    def hist(mi):
+        return mi.decl.kind == "histogram"
+
+    def last_write(mi):
+        return not counter(mi) and not hist(mi)
+
+    def buckets(mi):
+        return "array(" + ", ".join(
+            f"named_struct('le', {_sql_double(m)}, 'count', "
+            f"CAST(coalesce(__b{all_bounds.index(m)}, 0) AS BIGINT))"
+            for m in _bucket_maxes(mi)
+        ) + ")"
+
+    cols = {
+        "prog": sq(compiled.name),
+        "name": "name",
+        "kind": per_metric(lambda mi: sq(mi.decl.kind)),
+        "vtype": per_metric(
+            lambda mi: sq("Buckets" if hist(mi) else mi.vtype)
+        ),
+        # unlabelled metrics carry an empty map, as the folds do
+        "labels": per_metric(
+            lambda mi: "map_from_arrays(array("
+            + ", ".join(sq(k) for k in mi.decl.keys) + "), labels)"
+            if mi.decl.keys else None,
+            "map()",
+        ),
+        "value_i": per_metric(
+            lambda mi: "sum_i" if counter(mi) and mi.vtype == "Int"
+            else "lvi" if has_lww and last_write(mi) else None
+        ),
+        "value_f": per_metric(
+            lambda mi: "sum_f" if counter(mi) and mi.vtype == "Float"
+            else "lvf" if has_lww and last_write(mi) else None
+        ),
+        "value_s": per_metric(
+            lambda mi: "lvs" if has_text and last_write(mi) else None
+        ),
+        "buckets": per_metric(lambda mi: buckets(mi) if hist(mi) else None),
+        "bucket_count": per_metric(lambda mi: "n_obs" if hist(mi) else None),
+        "bucket_sum": per_metric(
+            lambda mi: "coalesce(sum_f, 0.0)" if hist(mi) else None
+        ),
+        # untouched (zero-init-only) counters carry the epoch-0
+        # timestamp (golden hash requires it); touched metrics keep
+        # the timestamp of their last real write
+        "ts_us": per_metric(
+            lambda mi: "CASE WHEN n_obs = 0 THEN 0 ELSE last_ts END"
+            if counter(mi) else None,
+            "last_ts",
+        ),
+    }
+    select = ", ".join(
+        f"CAST({cols[c]} AS {t}) AS {c}" for c, t in _STORE_COLS
+    )
+    where = f" WHERE NOT (name IN ({', '.join(hidden)}))" if hidden else ""
+    return f"WITH {', '.join(ctes)} SELECT {select} FROM __store{where}"
+
+
+def vectorized_store(
+    compiled, spark: SparkSession, log_lines: DataFrame, now_us: int = 0
+) -> DataFrame:
+    """Run a vectorizable program, returning the STORE_SCHEMA frame.
+
+    The plan is one SQL text (store_sql) over a temp view of
+    `log_lines`, built once per program and input shape and memoized
+    on the CompiledProgram as text only — no DataFrame, session or
+    executed state, so a hit can never serve stale rows.  A call then
+    costs a view registration and one `spark.sql`, a few py4j round
+    trips instead of one per Column call."""
+    # Scalar-register programs route by input size: big inputs take
+    # the chunk-parallel prefix scan (their parallelism comes from the
+    # chunk exchange — a second raw shuffle would be pure waste),
+    # small inputs and micro-batches (size unknown -> None) keep the
+    # cheaper per-file window.
+    chunked = False
+    if compiled.scalar_registers:
+        from mtail_spark.session import estimated_local_input_bytes
+
+        nbytes = estimated_local_input_bytes(log_lines)
+        chunked = nbytes is not None and nbytes > 64 * 1024 * 1024
+
+    # The per-line work (regex extraction, strptime, typed casts) is
+    # CPU-heavy, so parallelism must match the cluster even when the
+    # source planned few splits.  Order is carried as data
+    # (filename, line_no), so the repartition is semantics-preserving;
+    # streaming micro-batch frames are left alone.
+    if not chunked:
+        from mtail_spark.session import ensure_parallelism
+
+        log_lines = ensure_parallelism(log_lines, spark)
+    from mtail_spark.sources.logs import is_single_file_relation
+
+    key = (now_us, compiled.override_timezone,
+           is_single_file_relation(log_lines), chunked)
+    text = compiled._store_sql.get(key)
+    if text is None:
+        text = compiled._store_sql[key] = store_sql(compiled, *key)
+    # use the input frame's own session: under foreachBatch the batch
+    # DataFrame belongs to a cloned micro-batch session whose temp
+    # views the outer session cannot see
+    sess = log_lines.sparkSession
+    view = _lines_view(compiled)
+    log_lines.createOrReplaceTempView(view)
+    store = sess.sql(text)
+    sess.catalog.dropTempView(view)
+    return store

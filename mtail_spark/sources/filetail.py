@@ -226,16 +226,30 @@ def filetail_lines_stream(
 ) -> DataFrame:
     """Streaming (filename, spool_seq, line) relation over a
     tail-spool root.
-    The filename column is the ORIGINAL tailed path (percent-decoded
-    from the per-source subdirectory name), so getfilename() and the
-    per-file merge order behave exactly as with direct reads."""
+
+    The source lists the root itself, recursively, keeping only
+    `spool-*.log` files: one root path, so each trigger's
+    `latestOffset` lists the spool on the driver.  (A glob would hand
+    the file index one root path per spool file, and past
+    `parallelPartitionDiscovery.threshold` paths every trigger would
+    run a listing job with one task per file.)  The filter also keeps
+    `offsets.json` and the `.spool-*.tmp` files out.
+
+    The filename column is the ORIGINAL tailed path, so getfilename()
+    and the per-file merge order behave exactly as with direct reads.
+    `input_file_name()` is a URI, which escapes the `%` of the
+    percent-encoded subdirectory name once more: the URI is decoded
+    first, then the directory name (decode_spool_filename)."""
     from mtail_spark.sources.spool import spool_seq_col
 
-    raw = spark.readStream.format("text").load(
-        os.path.join(spooler.root, "*", "spool-*.log")
+    raw = (
+        spark.readStream.format("text")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "spool-*.log")
+        .load(spooler.root)
     )
     fname = F.url_decode(
-        F.element_at(F.split(F.input_file_name(), "/"), -2)
+        F.element_at(F.split(F.url_decode(F.input_file_name()), "/"), -2)
     )
     return raw.select(
         fname.alias("filename"),
@@ -246,5 +260,6 @@ def filetail_lines_stream(
 
 def decode_spool_filename(spool_path: str) -> str:
     """Original source path for one spool file path (driver-side
-    mirror of filetail_lines_stream's column derivation)."""
+    mirror of filetail_lines_stream's column derivation, which first
+    decodes the URI layer a local path does not have)."""
     return unquote(os.path.basename(os.path.dirname(spool_path)))

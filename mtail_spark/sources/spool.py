@@ -256,10 +256,18 @@ def spool_lines_stream(spark: SparkSession, spooler) -> DataFrame:
     """Streaming (filename, spool_seq, line) relation over a spooler's
     directory.  getfilename() reports the ORIGINAL sourcename (fifo
     path / socket endpoint), matching reference behavior, not the
-    spool file."""
+    spool file.
+
+    The source lists the spool directory itself with a
+    `spool-*.log` name filter (which also keeps the `.spool-*.tmp`
+    files out): one root path, so a trigger's `latestOffset` lists it
+    on the driver instead of running a listing job with one task per
+    spool file, as a glob does past
+    `parallelPartitionDiscovery.threshold` files."""
     raw = (
         spark.readStream.format("text")
-        .load(os.path.join(spooler.spool.path, "spool-*.log"))
+        .option("pathGlobFilter", "spool-*.log")
+        .load(spooler.spool.path)
     )
     return raw.select(
         F.lit(spooler.sourcename).alias("filename"),

@@ -32,3 +32,30 @@ SF_CORRECT = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def sf_smoke():
     return SF_SMOKE
+
+
+def _job_descriptions(spark) -> dict:
+    """{job id: description} from the driver's status store."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out = {}
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        d = j.description()
+        out[j.jobId()] = d.get() if d.isDefined() else ""
+    return out
+
+
+@pytest.fixture
+def new_listing_jobs(spark):
+    """Returns a function listing the descriptions of the Spark
+    file-listing jobs ("Listing leaf files ...") run since the test
+    began."""
+    before = set(_job_descriptions(spark))
+
+    def listing_jobs() -> list:
+        return [
+            d for i, d in sorted(_job_descriptions(spark).items())
+            if i not in before and d.startswith("Listing leaf files")
+        ]
+
+    return listing_jobs

@@ -160,3 +160,100 @@ def test_serve_mode_seeks_existing_to_end(tmp_path):
     )
     sp2.poll_once()
     assert _spooled_lines(str(root))[str(log)] == ["new1", "while-down"]
+
+
+def _spool_round(root, sources, files_per_source, lines_per_file):
+    """Add finalized spool files to a tail root as FileTailSpooler
+    leaves it: one percent-encoded subdirectory per tailed path, plus
+    the offsets sidecar and an unfinished .spool-*.tmp."""
+    from urllib.parse import quote
+
+    from mtail_spark.sources.spool import SpoolDir
+
+    for src in sources:
+        sd = SpoolDir(os.path.join(root, quote(src, safe="")))
+        for k in range(files_per_source):
+            sd.add_lines([f"{src} {k} {i}" for i in range(lines_per_file)])
+            sd.flush()
+        with open(os.path.join(sd.path, ".spool-99999999.tmp"), "w") as fh:
+            fh.write("half written\n")
+    with open(os.path.join(root, "offsets.json"), "w") as fh:
+        fh.write('{"x": 1}\n')
+
+
+LINES_BY_FILE = (
+    "counter lines_total by file\n"
+    "// { lines_total[getfilename()]++ }\n"
+)
+
+
+def _lines_by_file(store) -> dict:
+    return {
+        r["labels"]["file"]: r["value_i"]
+        for r in store.rows(include_internal=False)
+        if r["name"] == "lines_total"
+    }
+
+
+def test_spool_root_listed_without_a_listing_job(
+    spark, tmp_path, new_listing_jobs
+):
+    """A tail root that grows past parallelPartitionDiscovery.threshold
+    (32) spool files, across two tailed files: the stream counts every
+    line exactly once, skips the offsets sidecar and the .tmp files,
+    and lists the root on the driver — no Spark listing job.  The files
+    arrive in two rounds of 22, because a batch's own new files are
+    still read as one path each."""
+    import types
+
+    from mtail_spark.compiler.api import compile_program
+    from mtail_spark.sources.filetail import filetail_lines_stream
+    from mtail_spark.streaming import run_program_stream
+
+    root = str(tmp_path / "spool")
+    srcs = [str(tmp_path / "logs" / "a.log"), str(tmp_path / "logs" / "b.log")]
+    _spool_round(root, srcs, files_per_source=11, lines_per_file=3)
+    store, query = run_program_stream(
+        compile_program(LINES_BY_FILE, "lbf.mtail"), spark, None,
+        source=filetail_lines_stream(
+            spark, types.SimpleNamespace(root=root)
+        ),
+    )
+    try:
+        query.processAllAvailable()
+        _spool_round(root, srcs, files_per_source=11, lines_per_file=3)
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert _lines_by_file(store) == {srcs[0]: 66, srcs[1]: 66}
+    assert new_listing_jobs() == []
+
+
+def test_serve_getfilename_is_the_tailed_path(spark, tmp_path):
+    """Serve mode's getfilename() is the tailed path as given, and
+    --ignore_filename_regex_pattern matches its basename."""
+    from mtail_spark.compiler.api import compile_program
+    from mtail_spark.sources.filetail import filetail_lines_stream
+    from mtail_spark.streaming import run_program_stream
+
+    logs = tmp_path / "var" / "log"
+    logs.mkdir(parents=True)
+    (logs / "app0.log").write_text("a\nb\n")
+    (logs / "app1.log").write_text("c\n")
+    sp = FileTailSpooler(str(logs / "*.log"), str(tmp_path / "spool"))
+    sp.poll_once()
+    prog = compile_program(LINES_BY_FILE, "lbf.mtail")
+    got = {}
+    for ignore in (None, r"^app0\.log$"):
+        store, query = run_program_stream(
+            prog, spark, None, ignore_basename_regex=ignore,
+            source=filetail_lines_stream(spark, sp),
+        )
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+        got[ignore] = _lines_by_file(store)
+    assert got[None] == {str(logs / "app0.log"): 2,
+                         str(logs / "app1.log"): 1}
+    assert got[r"^app0\.log$"] == {str(logs / "app1.log"): 1}

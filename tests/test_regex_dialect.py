@@ -12,6 +12,7 @@ import pytest
 
 from mtail_spark.compiler import chunkfold as CF
 from mtail_spark.compiler.api import compile_program
+from mtail_spark.compiler.checker import CheckError
 from mtail_spark.store import rows_from_df
 
 # (case, RE2 pattern, the LINES it matches under RE2)
@@ -29,16 +30,26 @@ ROWS = [
     # or \u2028 (Java) or \n (Python)
     ("end", r"^a$", {"a"}),
     # . is any character but \n (Java's also rejects \r and \u0085)
-    ("dot", r"^a.b$", {"a b", "a\u00a0b", "a\x0bb", "a\rb", "a\u0085b"}),
-    # \b is an ASCII word boundary: one lies between t and é, none
-    # between a space and é
-    ("boundary", r"\bé", {"été!"}),
+    ("dot", r"^a.b$", {"a b", "a\u00a0b", "a\x0bb", "a\rb", "a\u0085b",
+                       "a.b", "axb"}),
+    # \b is an ASCII word boundary: one lies between t and é (or x and
+    # é), none between a space (or a dot) and é
+    ("boundary", r"\bé", {"été!", "Axé"}),
+    # \x{hex} is one code point, inside [...] too: \x{2e} a literal dot
+    ("hex", r"^\x{41}\x{2e}\x{e9}$", {"A.é"}),
+    ("hex_astral", r"^\x{1F600}$", {"\U0001F600"}),
+    ("hex_class", r"^[\x{41}-\x{43}]+$", {"AB"}),
+    # \Q...\E quotes its text; a repeat after \E takes the last
+    # character only
+    ("quote", r"^\Qa.b\E$", {"a.b"}),
+    ("quote_repeat", r"^\Q+(\E?$", {"+(", "+"}),
 ]
 
 LINES = [
     "34 x", "\u0663\u0664 x", "a b", "a\u00a0b", "a\x0bb", "ab!",
     "été!", "a", "a\r", "a\u0085", "a\u2028", "a\rb", "a\u0085b",
-    " é",
+    " é", "A.é", "Axé", "\U0001F600", "AB", "ABD", "a.b", "axb", "+(",
+    "+",
 ]
 
 SRC = "counter hits by case\n" + "".join(
@@ -78,3 +89,16 @@ def test_backends_match_as_re2(spark, monkeypatch, backend, interp):
         if cache is not None:
             cache.unpersist()
     assert {dict(r.labels)["case"]: r.value for r in rows} == EXPECTED
+
+
+@pytest.mark.parametrize("pattern", [
+    # valid RE2 that Python `re` cannot express: Unicode class tables
+    # and flags that change mid-pattern
+    r"\pL+ x",
+    r"a(?i)b",
+    # RE2 itself rejects \Q inside a class
+    r"[\Qa\E]",
+])
+def test_untranslatable_patterns_are_rejected(pattern):
+    with pytest.raises(CheckError):
+        compile_program(f"counter c\n/{pattern}/ {{ c++ }}\n", "rej.mtail")

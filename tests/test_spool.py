@@ -190,3 +190,48 @@ def test_spool_streaming_serve_path(spark, tmp_path):
         if r["name"] == "units"
     }
     assert got == {(("kind", "gremlin"),): 13, (("kind", "widget"),): 5}
+
+
+def test_spool_dir_listed_without_a_listing_job(
+    spark, tmp_path, new_listing_jobs
+):
+    """A spool directory that grows past
+    parallelPartitionDiscovery.threshold (32) files: every line is
+    counted exactly once, the .tmp file is skipped, and no Spark
+    listing job runs.  The files arrive in two rounds of 20, because a
+    batch's own new files are still read as one path each."""
+    import types
+
+    from mtail_spark.compiler.api import compile_program
+    from mtail_spark.sources.spool import spool_lines_stream
+    from mtail_spark.streaming import run_program_stream
+
+    sd = SpoolDir(str(tmp_path / "spool"))
+
+    def spool_round():
+        for k in range(20):
+            sd.add_lines([f"line {k} {i}" for i in range(3)])
+            sd.flush()
+
+    spool_round()
+    with open(os.path.join(sd.path, ".spool-99999999.tmp"), "w") as fh:
+        fh.write("half written\n")
+    prog = compile_program(
+        "counter lines_total\n// { lines_total++ }\n", "lc.mtail"
+    )
+    store, query = run_program_stream(
+        prog, spark, None,
+        source=spool_lines_stream(
+            spark, types.SimpleNamespace(spool=sd, sourcename="fifo://t")
+        ),
+    )
+    try:
+        query.processAllAvailable()
+        spool_round()
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    got = [r["value_i"] for r in store.rows(include_internal=False)
+           if r["name"] == "lines_total"]
+    assert got == [120]
+    assert new_listing_jobs() == []
