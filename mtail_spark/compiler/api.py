@@ -5,91 +5,21 @@
 
 Backend selection (SURVEY.md §7 "hard parts #1"): programs that read
 metric state (hidden-metric folds, del, metric-valued conditions) are
-order-sensitive and run as an applyInPandas fold per file — parallel
-across files, sequential within each file.  Everything else runs on
-the vectorized DataFrame backend (codegen.py): one projection pass +
-one shuffle, Catalyst/Tungsten codegen end to end.
+order-sensitive and run as a fold per file (chunkfold.fold_store) —
+parallel across files, sequential within each file.  Everything else
+runs on the vectorized DataFrame backend (codegen.py): one projection
+pass + one shuffle, Catalyst/Tungsten codegen end to end.
 """
 
 from __future__ import annotations
 
-import json
+import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from mtail_spark.compiler.checker import CheckedProgram, check
 from mtail_spark.compiler.interp import Interp
-from mtail_spark.store import STORE_SCHEMA
-
-# Partial store rows produced by each per-file fold (labels/buckets as
-# JSON strings: exact, Arrow-friendly transport).
-PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("src_file", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("vtype", T.StringType(), False),
-        T.StructField("labels_json", T.StringType(), False),
-        T.StructField("value_i", T.LongType(), True),
-        T.StructField("value_f", T.DoubleType(), True),
-        T.StructField("value_s", T.StringType(), True),
-        T.StructField("buckets_json", T.StringType(), True),
-        T.StructField("bucket_count", T.LongType(), True),
-        T.StructField("bucket_sum", T.DoubleType(), True),
-        T.StructField("ts_us", T.LongType(), True),
-    ]
-)
-
-_LABELS_TYPE = T.MapType(T.StringType(), T.StringType())
-_BUCKETS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("le", T.DoubleType(), False),
-            T.StructField("count", T.LongType(), False),
-        ]
-    )
-)
-
-
-def _rows_to_partial(rows, src_file: str):
-    """DatumRows -> records matching PARTIAL_SCHEMA."""
-    out = []
-    for r in rows:
-        rec = {
-            "src_file": src_file,
-            "name": r.name,
-            "kind": r.kind,
-            "vtype": r.vtype,
-            "labels_json": json.dumps(dict(r.labels), sort_keys=True),
-            "value_i": None,
-            "value_f": None,
-            "value_s": None,
-            "buckets_json": None,
-            "bucket_count": None,
-            "bucket_sum": None,
-            "ts_us": r.ts,
-        }
-        if r.vtype == "Int":
-            rec["value_i"] = int(r.value)
-        elif r.vtype == "Float":
-            rec["value_f"] = float(r.value)
-        elif r.vtype == "String":
-            rec["value_s"] = r.value
-        else:  # Buckets
-            buckets, count, total = r.value
-            rec["buckets_json"] = json.dumps(
-                [
-                    {"le": ("Infinity" if le == float("inf") else le), "count": c}
-                    for le, c in buckets
-                ]
-            )
-            rec["bucket_count"] = count
-            rec["bucket_sum"] = total
-        out.append(rec)
-    return out
 
 
 def _input_fingerprint(df: DataFrame):
@@ -135,8 +65,10 @@ class CompiledProgram:
     _scalar_registers: bool = False
     # Ellipsis = not yet computed; None = chunkfoldable; str = reason not
     _chunkfold_reason: object = Ellipsis
-    # codegen.store_sql's key -> the vectorized store plan's SQL text
-    # (text only: no DataFrame, session or executed state)
+    # SQL texts of the program's store plans, by key: codegen.store_sql's
+    # for the vectorized store, ("merge", chunked) for the folds' merge
+    # and ("prefilter",) for their line prefilter (text only: no
+    # DataFrame, session or executed state)
     _store_sql: dict = field(default_factory=dict, repr=False,
                              compare=False)
     # (backend, now_us, flags, session token, input-plan semanticHash,
@@ -202,28 +134,20 @@ class CompiledProgram:
             )
         return self._chunkfold_reason is None
 
-    def _auto_backend(
-        self, log_lines: DataFrame, input_bytes: int | None = None
-    ) -> str:
+    def _auto_backend(self, input_bytes) -> str:
         """Backend selection.  Stateless programs: the vectorized
         DataFrame plan (whole-stage codegen, ~900 klines/s marginal).
-        Register-RMW programs on LARGE inputs: the chunk-parallel
-        speculative fold (fold constants x chunk parallelism; the
+        Register-RMW programs on LARGE inputs: chunkfold (fold
+        constants x chunk parallelism; the
         vectorized carry-window plan's per-line constant loses past
         ~64 MB).  Small register inputs keep the window plan /
         sequential fold, whose fixed overheads are lower.
 
-        input_bytes: caller-supplied size for relations the file-stat
-        estimator can't see (streaming micro-batches report no
-        inputFiles; the serving pipeline measures the batch instead —
-        pipeline.py)."""
+        input_bytes(): the input's size, or None when unknown."""
         if self.checked.cross_line_state and self.chunkfoldable:
             from mtail_spark.compiler.chunkfold import CHUNKFOLD_MIN_BYTES
-            from mtail_spark.session import estimated_local_input_bytes
 
-            est = estimated_local_input_bytes(log_lines)
-            if est is None:
-                est = input_bytes
+            est = input_bytes()
             if est is not None and est > CHUNKFOLD_MIN_BYTES:
                 return "chunkfold"
         return "vector" if self.vectorizable else "fold"
@@ -275,8 +199,21 @@ class CompiledProgram:
         collect each result right after its run_batch (or call
         session.reset_scan_tuning between unrelated scans); the tuning
         only affects split sizing (performance), never results."""
+        from mtail_spark.session import estimated_local_input_bytes
+
+        # file-stat size of the input, taken at most once per call
+        local_bytes = functools.cache(
+            lambda: estimated_local_input_bytes(log_lines)
+        )
         if backend == "auto":
-            backend = self._auto_backend(log_lines, input_bytes)
+            # input_bytes: caller-supplied size for relations the
+            # file-stat estimator can't see (streaming micro-batches
+            # report no inputFiles; the serving pipeline measures the
+            # batch instead — pipeline.py)
+            backend = self._auto_backend(
+                lambda: input_bytes if local_bytes() is None
+                else local_bytes()
+            )
         key = None
         if cache_plan:
             from mtail_spark.session import session_token
@@ -320,6 +257,16 @@ class CompiledProgram:
                     except Exception:
                         pass
                 return df
+        sp = None
+        if backend in ("vector", "chunkfold"):
+            # Store-agg reduce side is store-sized; size its shuffle
+            # from the input (consulted at action time — chunkfold's
+            # exact path acts inside its build — and the session conf
+            # travels with the plan under the same single-tuner
+            # invariant as maxPartitionBytes above).
+            from mtail_spark.session import tune_store_shuffle
+
+            sp = tune_store_shuffle(spark, local_bytes())
         if backend == "vector":
             from mtail_spark.compiler.codegen import vectorized_store
 
@@ -329,21 +276,9 @@ class CompiledProgram:
 
             df = chunkfold_store(self, spark, log_lines, now_us=now_us)
         else:
-            df = self._run_fold(spark, log_lines, now_us)
-        sp = None
-        if backend in ("vector", "chunkfold"):
-            # Store-agg reduce side is store-sized; size its shuffle
-            # from the input (consulted at action time — the session
-            # conf travels with the plan under the same single-tuner
-            # invariant as maxPartitionBytes above).
-            from mtail_spark.session import (
-                estimated_local_input_bytes,
-                tune_store_shuffle,
-            )
+            from mtail_spark.compiler.chunkfold import fold_store
 
-            sp = tune_store_shuffle(
-                spark, estimated_local_input_bytes(log_lines)
-            )
+            df = fold_store(self, spark, log_lines, now_us=now_us)
         if key is not None:
             try:
                 mpb = spark.conf.get(_MPB)
@@ -419,207 +354,6 @@ class CompiledProgram:
             return True
         except Exception:
             return False
-
-    def _run_fold(self, spark, log_lines, now_us: int) -> DataFrame:
-        """Executor-side CHUNKED ordered fold.
-
-        Hash-partition by filename, sort within partitions by
-        (filename, line_no), then stream Arrow batches through
-        per-file interpreter runtimes inside mapInPandas: sequential
-        within a file (the only order the DSL requires), parallel
-        across files, and per-task memory bounded by the Arrow batch
-        size plus the metric stores — a 100 GB file folds in one task
-        but never materializes as one pandas DataFrame (the r1 shape,
-        groupBy(filename).applyInPandas, handed the whole file to one
-        pandas group).
-        """
-        from mtail_spark.session import ensure_workers_can_import
-
-        ensure_workers_can_import(spark)
-        src, name, use_year = self.src, self.name, self.syslog_use_current_year
-        tz = self.override_timezone
-
-        pats = self._fold_prefilter_patterns()
-        if pats and not self._java_compilable(spark, pats):
-            pats = None
-        if pats:
-            cond = F.col("line").rlike(pats[0])
-            for p in pats[1:]:
-                cond = cond | F.col("line").rlike(p)
-            log_lines = log_lines.filter(cond)
-
-        def fold_chunks(batches):
-            import pandas as pd
-
-            from mtail_spark.compiler.api import _rows_to_partial
-            from mtail_spark.compiler.checker import check as _check
-            from mtail_spark.compiler.interp import Interp as _Interp
-
-            prog = _check(src, name)
-            it = _Interp(prog, use_year, tz=tz)
-            runtimes: dict = {}
-            for pdf in batches:
-                for fname, sub in pdf.groupby("filename", sort=False):
-                    rt = runtimes.get(fname)
-                    if rt is None:
-                        rt = it.new_runtime(now_us=now_us, filename=fname)
-                        runtimes[fname] = rt
-                    it.feed(rt, zip(sub["line_no"], sub["line"]))
-            out = []
-            for fname, rt in runtimes.items():
-                out.append(
-                    pd.DataFrame(
-                        _rows_to_partial(
-                            rt.store.export_rows(name), fname
-                        ),
-                        columns=[f.name for f in PARTIAL_SCHEMA.fields],
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-        partial = (
-            log_lines.repartition(F.col("filename"))
-            .sortWithinPartitions("filename", "line_no")
-            .mapInPandas(fold_chunks, schema=PARTIAL_SCHEMA)
-        )
-        return merge_partial_stores(
-            partial, self.name, kinds=self.exported_kinds
-        )
-
-
-def merge_partial_stores(
-    partial: DataFrame, prog_name: str, kinds=None
-) -> DataFrame:
-    """Merge per-file partial stores into one store (deterministic
-    cross-file semantics: counters/histograms are additive; gauges,
-    timers and text take the datum with the latest (ts, src_file);
-    datum timestamps are the max across files)."""
-    p = partial.withColumn(
-        "buckets", F.from_json("buckets_json", _BUCKETS_TYPE)
-    )
-    return merge_parsed_partials(p, prog_name, kinds)
-
-
-def merge_parsed_partials(
-    p: DataFrame, prog_name: str, kinds=None
-) -> DataFrame:
-    """merge_partial_stores core over a relation with a parsed
-    buckets ARRAY column — shared with the chunkfold backend's
-    per-file collapse (chunkfold._merge_chunk_partials), which
-    produces per-file rows directly so histograms never round-trip
-    through JSON.
-
-    kinds, when given, is the set of EXPORTED metric kinds the
-    program declares (compile-time knowledge): branches whose kinds
-    are absent are skipped entirely — a counter-only program plans
-    one aggregation instead of three branches plus a join, and the
-    empty-branch stages never reach the scheduler.
-
-    Aggregation buffers stay PRIMITIVE wherever the kind allows
-    (counters/histogram sums + max over longs -> HashAggregate); the
-    labels MAP is re-parsed from labels_json once per OUTPUT row
-    after the merge rather than carried through a first(map) buffer,
-    which would demote every branch to SortAggregate.  Only the
-    gauge/timer/text pick (ordering by (ts, src_file), a struct)
-    keeps a non-primitive buffer — store-sized by then."""
-    additive = p.filter(F.col("kind") == "counter")
-
-    def want(*ks):
-        return kinds is None or any(k in kinds for k in ks)
-
-    # zero-init rows (value 0, ts 0) exist per file; summing keeps the
-    # identity, and max(ts) keeps epoch 0 only when never updated.
-    counters = additive.groupBy("name", "kind", "vtype", "labels_json").agg(
-        F.sum("value_i").alias("value_i"),
-        F.sum("value_f").alias("value_f"),
-        F.lit(None).cast("string").alias("value_s"),
-        F.lit(None).cast(_BUCKETS_TYPE).alias("buckets"),
-        F.lit(None).cast("long").alias("bucket_count"),
-        F.lit(None).cast("double").alias("bucket_sum"),
-        F.max("ts_us").alias("ts_us"),
-    )
-
-    lww = p.filter(F.col("kind").isin("gauge", "timer", "text"))
-    file_ord = F.struct(F.col("ts_us"), F.col("src_file"))
-    gauges = (
-        lww.groupBy("name", "kind", "vtype", "labels_json")
-        .agg(
-            F.max_by("value_i", file_ord).alias("value_i"),
-            F.max_by("value_f", file_ord).alias("value_f"),
-            F.max_by("value_s", file_ord).alias("value_s"),
-            F.max_by("ts_us", file_ord).alias("out_ts"),
-        )
-        .select(
-            "name", "kind", "vtype", "labels_json",
-            "value_i", "value_f", "value_s",
-            F.lit(None).cast(_BUCKETS_TYPE).alias("buckets"),
-            F.lit(None).cast("long").alias("bucket_count"),
-            F.lit(None).cast("double").alias("bucket_sum"),
-            F.col("out_ts").alias("ts_us"),
-        )
-    )
-
-    hist = p.filter(F.col("kind") == "histogram")
-    hb = (
-        hist.select(
-            "name", "kind", "vtype", "labels_json",
-            F.explode("buckets").alias("b"),
-        )
-        .groupBy(
-            "name", "kind", "vtype", "labels_json",
-            F.col("b.le").alias("le"),
-        )
-        .agg(F.sum("b.count").alias("cnt"))
-    )
-    hist_merged = (
-        hb.groupBy("name", "kind", "vtype", "labels_json")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("le"), F.col("cnt").alias("count")))
-            ).alias("buckets"),
-        )
-        .join(
-            hist.groupBy("name", "labels_json").agg(
-                F.sum("bucket_count").alias("bucket_count"),
-                F.sum("bucket_sum").alias("bucket_sum"),
-                F.max("ts_us").alias("ts_us"),
-            ),
-            ["name", "labels_json"],
-        )
-        .select(
-            "name", "kind", "vtype", "labels_json",
-            F.lit(None).cast("long").alias("value_i"),
-            F.lit(None).cast("double").alias("value_f"),
-            F.lit(None).cast("string").alias("value_s"),
-            "buckets", "bucket_count", "bucket_sum", "ts_us",
-        )
-    )
-
-    cols = [
-        "name", "kind", "vtype", "labels_json", "value_i",
-        "value_f", "value_s", "buckets", "bucket_count", "bucket_sum", "ts_us",
-    ]
-    branches = []
-    if want("counter"):
-        branches.append(counters.select(cols))
-    if want("gauge", "timer", "text"):
-        branches.append(gauges.select(cols))
-    if want("histogram"):
-        branches.append(hist_merged.select(cols))
-    if not branches:  # no exported metrics at all: empty store
-        branches.append(counters.select(cols))
-    merged = branches[0]
-    for b in branches[1:]:
-        merged = merged.unionByName(b)
-    out = merged.select(
-        F.lit(prog_name).alias("prog"),
-        "name", "kind", "vtype",
-        F.from_json("labels_json", _LABELS_TYPE).alias("labels"),
-        "value_i", "value_f", "value_s",
-        "buckets", "bucket_count", "bucket_sum", "ts_us",
-    )
-    return out
 
 
 _COMPILE_CACHE: dict = {}

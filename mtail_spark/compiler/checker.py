@@ -170,7 +170,9 @@ def translate_regex(pattern: str) -> str:
       a repeat is a literal, as in RE2;
     - \\x{hex} becomes its code point, inside [...] too, and the text
       of \\Q...\\E one escaped literal per character (RE2 allows
-      \\Q only outside classes).
+      \\Q only outside classes);
+    - a flag group that turns `i` on turns `u` on too, so Java folds
+      case by Unicode rules (the Kelvin sign is a k), as RE2 does.
     The (?P<name>) syntax is shared by RE2 and Python; the Spark
     backend strips names (Java group-name charset is narrower)."""
     out = []
@@ -212,7 +214,10 @@ def translate_regex(pattern: str) -> str:
                 fl = "".join(
                     f for f in set(fl + m[1]) if f not in (m[2] or "")
                 )
-                out.append(m[0])
+                # RE2 and Python fold case by Unicode rules, Java's
+                # (?i) by ASCII only unless u rides along
+                u = "u" if "i" in m[1] and "u" not in m[1] else ""
+                out.append("(?" + m[1] + u + m[0][2 + len(m[1]):])
                 i = m.end()
                 if m[3] == ")":
                     flags[-1] = fl

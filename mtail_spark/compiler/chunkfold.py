@@ -1,4 +1,4 @@
-"""Chunk-parallel speculative fold ("chunkfold") backend.
+"""Chunk-parallel fold ("chunkfold") backend, and the ordered fold.
 
 Register-RMW programs (cross-line scalar hidden-metric state, e.g.
 reference examples/mysql_slowqueries.mtail) are order-sensitive, so
@@ -7,44 +7,59 @@ file folds on one core.  The vectorized window plan
 (codegen.py:_plan_registers) parallelizes them but pays a large
 per-line expression constant (stratified carry windows; ~460
 core-us/line on mysql_slowqueries vs the fold interpreter's ~26).
-This backend combines fold constants with chunk parallelism:
+This backend combines fold constants with chunk parallelism.
 
-phase A — parallel, mapInPandas over (filename, chunk): run the
-  normal per-line interpreter SPECULATIVELY with tri-state scalar
-  registers.  A register written earlier in the chunk is Known; a
-  read of a chunk-incoming (Unknown) register raises NeedState, which
-  aborts the line — its partial effects are rolled back through an
-  undo journal — records the raw line for replay together with a
-  snapshot of the currently-Known registers, and marks every register
-  Unknown again (taint: the deferred line may write any of them).  A
-  line that completes without NeedState only read chunk-local state,
-  so its metric effects are valid unconditionally; registers written
-  by later non-deferred lines win over any deferred line's potential
-  writes exactly as they would have in a sequential fold.  In
-  log-shaped data registers re-resolve within a handful of lines
-  (mysql: the next "# User@Host" / "SET timestamp=" record header),
-  so deferral is O(record length) per chunk, not O(chunk).
+exact path — a chunk that holds a whole file has a known incoming
+  state: the initial one.  read_log_lines reads every file under
+  WHOLETEXT_MAX_BYTES whole and marks the relation
+  (sources.logs.is_whole_file_relation), so each file is such a
+  chunk.  ONE Spark action runs the per-file fold with the exact
+  interpreter (Interp.feed over a plain Store), a per-task audit that
+  each file's line numbers start at 0 and step by 1 inside one
+  partition, and the cross-file merge — no persist, no audit job, no
+  replay.  A failed audit reruns the call on the speculative path.
+  The ordered fold (fold_store) is the same exact path behind a
+  by-file exchange, which gives by construction what the audit
+  checks.
 
-phase B — executor-side, grouped by file: each chunk's summary
-  (final Known register values + the deferred raw lines, NEVER the
-  chunk's data) is replayed strictly in chunk order through the same
-  interpreter — one applyInPandas group per file, parallel across
-  files — inside the merge job: before each deferred line its
-  snapshot overlays the running register state (values written by
-  non-deferred lines between two deferred lines), the line executes
-  with full knowledge, and after a chunk's deferred lines the chunk's
-  finals overwrite the state for the next chunk.  This yields the
-  deferred lines' metric effects under the true incoming state.  The
-  driver sees only slim audit tuples (file, chunk, max_line,
-  disorder) — O(chunks) small rows; snapshots and raw deferred lines
-  never leave the executors.
+phase A — speculative, for split files and any other relation:
+  mapInPandas over (filename, chunk) runs the normal per-line
+  interpreter SPECULATIVELY with tri-state scalar registers. A
+  register written earlier in the chunk is Known; a read of a
+  chunk-incoming (Unknown) register raises NeedState, which aborts the
+  line — its partial effects are rolled back through an undo journal —
+  records the raw line for replay together with a snapshot of the
+  currently-Known registers, and marks every register Unknown again
+  (taint: the deferred line may write any of them). A line that
+  completes without NeedState only read chunk-local state, so its
+  metric effects are valid unconditionally; registers written by later
+  non-deferred lines win over any deferred line's potential writes
+  exactly as they would have in a sequential fold.  In log-shaped
+  data registers re-resolve within a handful of lines (mysql: the
+  next "# User@Host" / "SET timestamp=" record header), so deferral
+  is O(record length) per chunk, not O(chunk).
 
-merge — chunk partial stores collapse per file (counters/histograms
-  additively with the datum timestamp taken at the last (chunk, line)
-  update; gauge/timer/text pick the last (chunk, line) write), then
-  across files through exactly the ordered fold's merge semantics
-  (api.merge_parsed_partials), so chunkfold output is identical to
-  the sequential fold by construction wherever both are defined.
+phase B — executor-side, grouped by file, and only when some chunk
+  deferred a line: each chunk's summary (final Known register values +
+  the deferred raw lines, NEVER the chunk's data) is replayed strictly
+  in chunk order through the same interpreter — one applyInPandas
+  group per file, parallel across files — inside the merge job: before
+  each deferred line its snapshot overlays the running register state
+  (values written by non-deferred lines between two deferred lines),
+  the line executes with full knowledge, and after a chunk's deferred
+  lines the chunk's finals overwrite the state for the next chunk.
+  This yields the deferred lines' metric effects under the true
+  incoming state. The driver sees only slim audit tuples (file, chunk,
+  max_line, disorder, deferred count) — O(chunks) small rows;
+  snapshots and raw deferred lines never leave the executors.
+
+merge — one SQL text per program (merge_sql, memoized on the
+  CompiledProgram): chunk partial stores collapse per file
+  (counters/histograms additively with the datum timestamp taken at
+  the last (chunk, line) update; gauge/timer/text pick the last
+  (chunk, line) write), then merge across files with the fold's
+  semantics, so chunkfold output is identical to the sequential fold
+  by construction wherever both are defined.
 
 Scope (chunkfold_unsupported_reason): all metric READS and `del`s
 must target HIDDEN metrics (registers) — scalar or dimensioned
@@ -94,8 +109,8 @@ from mtail_spark.compiler.interp import Interp, LineError, Runtime, StopLine, St
 CHUNK_LINES = 32768
 
 # Auto-routing floor: below this input size the vectorized window
-# plan / plain fold win on fixed overheads (chunkfold pays two extra
-# jobs + a driver replay round trip, ~2-3 s); above it the window
+# plan / plain fold win on fixed overheads (the speculative path pays
+# a persisted phase A and an audit job); above it the window
 # plan's ~16x higher per-line constant dominates (measured
 # tools/bench_mysql_backends.py: 4.1 s vs 34.6 s at 37 MB).
 CHUNKFOLD_MIN_BYTES = 8 << 20
@@ -463,19 +478,24 @@ def _apply_state(st: Store, state: dict) -> None:
 
 # -------------------------------------------------------------- export
 
+# One row per datum of a chunk's partial store (row_type 0), plus, on
+# the speculative path, each chunk's finals (1) and deferred lines (2).
+# The exact path's rows are the same shape: a whole file is one chunk.
+# Labels travel as their values in key order and histogram counts as
+# an array padded to the program's widest histogram; kind, vtype,
+# label keys and bucket bounds are compile-time constants that the
+# merge SQL puts back.
 CHUNK_SCHEMA = T.StructType(
     [
         T.StructField("src_file", T.StringType(), False),
         T.StructField("chunk", T.LongType(), False),
-        T.StructField("row_type", T.IntegerType(), False),  # 0=partial
-        T.StructField("name", T.StringType(), True),        # 1=finals
-        T.StructField("kind", T.StringType(), True),        # 2=deferred
-        T.StructField("vtype", T.StringType(), True),
-        T.StructField("labels_json", T.StringType(), True),
+        T.StructField("row_type", T.IntegerType(), False),
+        T.StructField("name", T.StringType(), True),
+        T.StructField("labels", T.ArrayType(T.StringType()), True),
         T.StructField("value_i", T.LongType(), True),
         T.StructField("value_f", T.DoubleType(), True),
         T.StructField("value_s", T.StringType(), True),
-        T.StructField("buckets_json", T.StringType(), True),
+        T.StructField("counts", T.ArrayType(T.LongType()), True),
         T.StructField("bucket_count", T.LongType(), True),
         T.StructField("bucket_sum", T.DoubleType(), True),
         T.StructField("ts_us", T.LongType(), True),
@@ -493,51 +513,39 @@ def _blank_row(src_file, chunk, row_type):
     return r
 
 
-def _partials_with_tags(st: TrackingStore, src_file: str) -> list[dict]:
-    """Exported datums of one speculative/replay store as tagged
-    partial rows (mirrors Store.export_rows + api._rows_to_partial,
-    plus the (chunk, last_line) merge ordering; zero-init scalar
-    counter/histogram rows carry tag (-1, -1) so any real update
-    outranks them)."""
+def _partials_with_tags(st: Store, src_file: str) -> list[dict]:
+    """Exported datums of one store as partial rows (mirrors
+    Store.export_rows).  A TrackingStore's rows carry its (chunk,
+    last_line) merge tags; zero-init scalar counter/histogram rows,
+    and every row of a plain Store, carry (-1, -1), so any tagged
+    update outranks them."""
     prog = st.prog
+    tags = getattr(st, "last_upd", {})
+    width = max(map(len, st.bucket_maxes.values()), default=0)
     rows: list[dict] = []
     for name, mi in prog.metrics.items():
         if mi.decl.hidden:
             continue
         export_name = mi.decl.exported_name or name
-        kind, keys, vt = mi.decl.kind, mi.decl.keys, mi.vtype
+        kind, vt = mi.decl.kind, mi.vtype
         datums = dict(st.data[name])
-        if not keys and () not in datums:
+        if not mi.decl.keys and () not in datums:
             if kind == "counter":
                 datums[()] = [0.0 if vt == "Float" else 0, 0]
             elif kind == "histogram":
                 n = len(st.bucket_maxes[name])
                 datums[()] = [[0] * n, 0, 0.0, None]
         for labels, d in datums.items():
-            ch, ln = st.last_upd.get((name, labels), (-1, -1))
+            ch, ln = tags.get((name, labels), (-1, -1))
             r = _blank_row(src_file, ch, 0)
             r["name"] = export_name
-            r["kind"] = kind
-            r["labels_json"] = json.dumps(
-                dict(zip(keys, labels)), sort_keys=True
-            )
+            r["labels"] = list(labels)
             r["last_line"] = ln
             if kind == "histogram":
-                r["vtype"] = "Buckets"
-                r["buckets_json"] = json.dumps(
-                    [
-                        {
-                            "le": ("Infinity" if le == float("inf") else le),
-                            "count": c,
-                        }
-                        for le, c in zip(st.bucket_maxes[name], d[0])
-                    ]
-                )
-                r["bucket_count"] = d[1]
-                r["bucket_sum"] = d[2]
+                r["counts"] = d[0] + [0] * (width - len(d[0]))
+                r["bucket_count"], r["bucket_sum"] = d[1], d[2]
                 r["ts_us"] = d[3]
             else:
-                r["vtype"] = vt
                 if vt == "Int":
                     r["value_i"] = int(d[0])
                 elif vt == "Float":
@@ -716,6 +724,7 @@ def _phase_a_fn(src: str, name: str, use_year: bool, tz, now_us: int):
             fin["last_line"] = 1 << 62  # sorts after the chunk's deferred
             fin["value_i"] = max_line
             fin["value_f"] = 1.0 if disorder else 0.0
+            fin["bucket_count"] = len(deferred)  # 0 everywhere: no phase B
             out.append(fin)
             for line_no, line, snap in deferred:
                 dr = _blank_row(fname, ch, 2)
@@ -792,129 +801,309 @@ def _replay_fn(src: str, name: str, use_year: bool, tz, now_us: int):
     return fn
 
 
+# ------------------------------------------------------------- exact
+
+
+def _exact_fn(src: str, name: str, use_year: bool, tz, now_us: int,
+              audit=None):
+    """mapInPandas closure: fold each file of the partition with the
+    exact interpreter (a plain Store), from the initial state, in
+    arrival order.
+
+    With `audit` (an accumulator) the partition must hold each file it
+    sees whole: the file's line numbers start at 0 and step by 1.
+    Lines the JVM prefilter nulled count for the audit only; a file
+    with no other line gets no store, as under fold_store's filter.
+    The first file that breaks it adds 1 to the accumulator
+    and ends the fold; the caller discards the result."""
+
+    def fn(batches):
+        import numpy as np
+        import pandas as pd
+
+        prog, it = _worker_prog(src, name, use_year, tz)
+        runtimes: dict = {}
+        nxt: dict = {}
+        ok = True
+        for pdf in batches:
+            if not ok:
+                continue  # drain the input
+            for fname, sub in pdf.groupby("filename", sort=False):
+                lnos = sub["line_no"].to_numpy()
+                lines = sub["line"]
+                if audit is not None:
+                    if (lnos[0] != nxt.get(fname, 0)
+                            or (np.diff(lnos) != 1).any()):
+                        audit.add(1)
+                        ok = False
+                        break
+                    nxt[fname] = int(lnos[-1]) + 1
+                    keep = lines.notna().to_numpy()
+                    if not keep.all():
+                        lnos, lines = lnos[keep], lines[keep]
+                        if not len(lnos):
+                            continue  # as if filtered: no store yet
+                rt = runtimes.get(fname)
+                if rt is None:
+                    rt = runtimes[fname] = it.new_runtime(
+                        now_us=now_us, filename=fname
+                    )
+                it.feed(rt, zip(lnos.tolist(), lines.tolist()))
+        if ok and runtimes:
+            yield pd.DataFrame(
+                [
+                    r
+                    for fname, rt in runtimes.items()
+                    for r in _partials_with_tags(rt.store, fname)
+                ],
+                columns=_COLS,
+            )
+
+    return fn
+
+
 # --------------------------------------------------------------- merge
 
 
-def _merge_chunk_partials(
-    partials: DataFrame, prog_name: str, kinds=None
-) -> DataFrame:
-    """Collapse per-(file, chunk) partials to per-file partials —
-    counters/histograms additively, gauge/timer/text by last
-    (chunk, line) write, datum ts at the last update — then merge
-    across files with exactly the fold's semantics.  kinds (the
-    program's exported kinds) prunes branches for absent kinds at
-    both levels."""
-    from mtail_spark.compiler.api import (
-        _BUCKETS_TYPE,
-        merge_parsed_partials,
+def merge_sql(cprog, view: str, chunked: bool) -> str:
+    """The store of a fold's partial rows (CHUNK_SCHEMA, over temp
+    view `view`) as ONE SQL text.
+
+    chunked: a file's chunk partials first collapse per file —
+    counters and histograms add up, gauge/timer/text keep the write
+    of the last line, and a datum's timestamp is its last update's.
+    Across files counters and histograms add up, gauge/timer/text take
+    the write with the latest (ts, file), and the timestamp is the
+    latest.  Zero rows of the keyless counters and histograms enter as
+    one more, file-less, relation, so an empty input still yields
+    them; an untouched counter carries the epoch-0 timestamp."""
+    from mtail_spark.compiler.codegen import (
+        _bucket_maxes,
+        _values_sql,
+        exported_metrics,
+        per_metric_sql,
+        sq,
+        store_select_sql,
     )
 
-    def want(*ks):
-        return kinds is None or any(k in kinds for k in ks)
+    exported = exported_metrics(cprog.checked)
 
-    # Within one file, (chunk, last_line) ordering collapses to
-    # last_line ALONE: chunk ids are the chunk's first line_no (or
-    # floor(line_no/CHUNK) in exchange mode), so last_line is
-    # file-wide monotonic in both modes and zero-init rows carry -1.
-    # A single BIGINT ordering keeps every stage-1 max_by PRIMITIVE
-    # (HashAggregate, never SortAggregate over the chunk partials).
-    p = partials
-    ord_ = F.col("last_line")
-    keys = ["src_file", "name", "kind", "vtype", "labels_json"]
+    def hist(mi):
+        return mi.decl.kind == "histogram"
 
-    nulls = [
-        F.lit(None).cast("string").alias("value_s"),
-        F.lit(None).cast(_BUCKETS_TYPE).alias("buckets"),
-        F.lit(None).cast("long").alias("bucket_count"),
-        F.lit(None).cast("double").alias("bucket_sum"),
-    ]
-    counters = (
-        p.filter(F.col("kind") == "counter")
-        .groupBy(keys)
-        .agg(
-            F.sum("value_i").alias("value_i"),
-            F.sum("value_f").alias("value_f"),
-            F.max_by("ts_us", ord_).alias("ts_us"),
+    counters = ", ".join(
+        sq(n) for n, mi in exported.items() if mi.decl.kind == "counter"
+    )
+    has_lww = any(
+        mi.decl.kind not in ("counter", "histogram")
+        for mi in exported.values()
+    )
+    width = max(
+        (len(_bucket_maxes(mi)) for mi in exported.values() if hist(mi)),
+        default=0,
+    )
+    bs = [f"b{k}" for k in range(width)]
+
+    def pick(col, order):
+        # counters add up; gauge/timer/text take the value of the row
+        # with the greatest `order`
+        keep = f"max_by({col}, {order})"
+        if not has_lww:
+            return f"sum({col})"
+        if not counters:
+            return keep
+        return (f"IF(name IN ({counters}), "
+                f"sum(IF(name IN ({counters}), {col}, NULL)), {keep})")
+
+    def values(order):
+        vs = f"max_by(value_s, {order})" if has_lww else "NULL"
+        return (f"{pick('value_i', order)} AS value_i, "
+                f"{pick('value_f', order)} AS value_f, {vs} AS value_s, "
+                + "".join(f"sum({b}) AS {b}, " for b in bs)
+                + "sum(bucket_count) AS bucket_count, "
+                "sum(bucket_sum) AS bucket_sum")
+
+    cols = [("src_file", "STRING"), ("name", "STRING"),
+            ("labels", "ARRAY<STRING>"), ("value_i", "BIGINT"),
+            ("value_f", "DOUBLE"), ("value_s", "STRING")]
+    cols += [(b, "BIGINT") for b in bs]
+    cols += [("bucket_count", "BIGINT"), ("bucket_sum", "DOUBLE"),
+             ("ts_us", "BIGINT"), ("last_line", "BIGINT")]
+    rows = (
+        "SELECT src_file, name, labels, value_i, value_f, value_s, "
+        + "".join(f"counts[{k}] AS {b}, " for k, b in enumerate(bs))
+        + f"bucket_count, bucket_sum, ts_us, last_line FROM {view} "
+        "WHERE row_type = 0"
+    )
+    zero = []
+    for nm, mi in exported.items():
+        if mi.decl.keys or mi.decl.kind not in ("counter", "histogram"):
+            continue
+        c = mi.decl.kind == "counter"
+        zero.append(
+            ["NULL", sq(nm), "array()",
+             "0" if c and mi.vtype != "Float" else "NULL",
+             "0.0" if c and mi.vtype == "Float" else "NULL", "NULL"]
+            + ["NULL"] * width
+            + ["NULL" if c else "0", "NULL" if c else "0.0", "NULL", "-1"]
         )
-        .select(*keys, "value_i", "value_f", *nulls, "ts_us")
+    if zero:
+        rows += f" UNION ALL {_values_sql(zero, cols)}"
+    ctes = [f"__p AS ({rows})"]
+    if chunked:
+        ctes.append(
+            "__f AS (SELECT src_file, name, labels, "
+            f"{values('last_line')}, max_by(ts_us, last_line) AS ts_us "
+            "FROM __p GROUP BY src_file, name, labels)"
+        )
+    ctes.append(
+        f"__s AS (SELECT name, labels, "
+        f"{values('struct(ts_us, src_file)')}, max(ts_us) AS ts_us, "
+        f"count(src_file) AS n_files FROM {'__f' if chunked else '__p'} "
+        "GROUP BY name, labels)"
     )
 
-    # per-column max_by over the same unique BIGINT ordering picks a
-    # consistent row (codegen.py stage A uses the same shape); the
-    # string column only enters for text programs
-    lww_vals = [
-        F.max_by("value_i", ord_).alias("value_i"),
-        F.max_by("value_f", ord_).alias("value_f"),
-        (
-            F.max_by("value_s", ord_)
-            if want("text")
-            else F.lit(None).cast("string")
-        ).alias("value_s"),
-        F.max_by("ts_us", ord_).alias("out_ts"),
-    ]
-    lww = (
-        p.filter(F.col("kind").isin("gauge", "timer", "text"))
-        .groupBy(keys)
-        .agg(*lww_vals)
-        .select(
-            *keys, "value_i", "value_f", "value_s",
-            F.lit(None).cast(_BUCKETS_TYPE).alias("buckets"),
-            F.lit(None).cast("long").alias("bucket_count"),
-            F.lit(None).cast("double").alias("bucket_sum"),
-            F.col("out_ts").alias("ts_us"),
-        )
-    )
+    def per_metric(fn, default="NULL"):
+        return per_metric_sql(exported, fn, default)
 
-    hist = p.filter(F.col("kind") == "histogram").withColumn(
-        "buckets", F.from_json("buckets_json", _BUCKETS_TYPE)
+    select = store_select_sql(
+        cprog, exported, lambda k, _m: bs[k],
+        value_i=per_metric(
+            lambda mi: "value_i"
+            if not hist(mi) and mi.vtype == "Int" else None
+        ),
+        value_f=per_metric(
+            lambda mi: "value_f"
+            if not hist(mi) and mi.vtype == "Float" else None
+        ),
+        value_s=per_metric(
+            lambda mi: "value_s"
+            if not hist(mi) and mi.vtype == "String" else None
+        ),
+        bucket_count=per_metric(
+            lambda mi: "bucket_count" if hist(mi) else None
+        ),
+        bucket_sum=per_metric(lambda mi: "bucket_sum" if hist(mi) else None),
+        ts_us=per_metric(
+            lambda mi: "IF(n_files = 0, 0, ts_us)"
+            if mi.decl.kind == "counter" else None,
+            "ts_us",
+        ),
     )
-    hb = (
-        hist.select(*keys, F.explode("buckets").alias("b"))
-        .groupBy(*keys, F.col("b.le").alias("le"))
-        .agg(F.sum("b.count").alias("cnt"))
-        .groupBy(keys)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("le"), F.col("cnt").alias("count"))
-                )
-            ).alias("buckets"),
-        )
-    )
-    hist_merged = (
-        hb.join(
-            hist.groupBy("src_file", "name", "labels_json").agg(
-                F.sum("bucket_count").alias("bucket_count"),
-                F.sum("bucket_sum").alias("bucket_sum"),
-                F.max_by("ts_us", ord_).alias("ts_us"),
-            ),
-            ["src_file", "name", "labels_json"],
-        )
-        .select(
-            *keys,
-            F.lit(None).cast("long").alias("value_i"),
-            F.lit(None).cast("double").alias("value_f"),
-            F.lit(None).cast("string").alias("value_s"),
-            "buckets", "bucket_count", "bucket_sum", "ts_us",
-        )
-    )
+    return f"WITH {', '.join(ctes)} SELECT {select} FROM __s"
 
-    branches = []
-    if want("counter"):
-        branches.append(counters)
-    if want("gauge", "timer", "text"):
-        branches.append(lww)
-    if want("histogram"):
-        branches.append(hist_merged)
-    if not branches:
-        branches.append(counters)
-    per_file = branches[0]
-    for b in branches[1:]:
-        per_file = per_file.unionByName(b)
-    return merge_parsed_partials(per_file, prog_name, kinds)
+
+def _merged(cprog, partials: DataFrame, chunked: bool) -> DataFrame:
+    """The store of `partials` through merge_sql, whose text is built
+    once per program and memoized on it: a call registers the view,
+    runs one `spark.sql` and drops the view."""
+    view = f"__mtail_partials_{id(cprog)}"
+    key = ("merge", chunked)
+    text = cprog._store_sql.get(key)
+    if text is None:
+        text = cprog._store_sql[key] = merge_sql(cprog, view, chunked)
+    sess = partials.sparkSession
+    partials.createOrReplaceTempView(view)
+    store = sess.sql(text)
+    sess.catalog.dropTempView(view)
+    return store
+
+
+def _prefilter_sql(cprog, spark) -> str | None:
+    """SQL condition on `line` that every line which can change the
+    store meets (CompiledProgram._fold_prefilter_patterns), or None;
+    memoized on the program."""
+    from mtail_spark.compiler.codegen import sq
+
+    key = ("prefilter",)
+    if key not in cprog._store_sql:
+        pats = cprog._fold_prefilter_patterns()
+        ok = pats and cprog._java_compilable(spark, pats)
+        cprog._store_sql[key] = (
+            " OR ".join(f"line RLIKE {sq(p)}" for p in pats) if ok else None
+        )
+    return cprog._store_sql[key]
+
+
+def _exact_args(cprog, now_us):
+    return (cprog.src, cprog.name, cprog.syslog_use_current_year,
+            cprog.override_timezone, now_us)
 
 
 # ---------------------------------------------------------------- run
+
+
+def fold_store(
+    cprog, spark: SparkSession, log_lines: DataFrame, now_us: int = 0
+) -> DataFrame:
+    """The ordered fold: chunkfold's one-chunk case behind a by-file
+    exchange.  Every file lands whole in one partition, sorted by
+    line_no, and folds from the initial state with the exact
+    interpreter — sequential within a file, parallel across files,
+    per-task memory bounded by the Arrow batch plus the stores.  The
+    exchange gives what the whole-file audit checks, so this serves
+    any program over any ordered relation.  Lazy, like the vectorized
+    store."""
+    from mtail_spark.session import ensure_workers_can_import
+
+    ensure_workers_can_import(spark)
+    cond = _prefilter_sql(cprog, spark)
+    if cond:
+        log_lines = log_lines.filter(cond)
+    partials = (
+        log_lines.repartition("filename")
+        .sortWithinPartitions("filename", "line_no")
+        .mapInPandas(_exact_fn(*_exact_args(cprog, now_us)),
+                     schema=CHUNK_SCHEMA)
+    )
+    return _merged(cprog, partials, chunked=False)
+
+
+def chunkfold_store(
+    cprog, spark: SparkSession, log_lines: DataFrame, now_us: int = 0
+) -> DataFrame:
+    """Run a register-RMW program chunk-parallel.
+
+    A whole-file read (sources.logs.is_whole_file_relation) takes the
+    exact path: every file is one chunk whose incoming state is the
+    initial one, so ONE Spark action folds each file exactly, audits
+    its line numbers per task and merges the stores, with no persist,
+    no audit job and no replay.  The rows come back as a local
+    relation.  Any other relation, or a failed audit, runs the
+    speculative phases A and B."""
+    from mtail_spark.session import ensure_workers_can_import
+    from mtail_spark.sources.logs import is_whole_file_relation
+
+    ensure_workers_can_import(spark)
+    if is_whole_file_relation(log_lines):
+        store = _exact_whole_files(cprog, spark, log_lines, now_us)
+        if store is not None:
+            return store
+    return _speculative_store(cprog, spark, log_lines, now_us)
+
+
+def _exact_whole_files(cprog, spark, log_lines, now_us):
+    """The exact path's store, or None when a task's audit failed."""
+    sess = log_lines.sparkSession
+    audit = sess.sparkContext.accumulator(0)
+    cond = _prefilter_sql(cprog, spark)
+    if cond:
+        # the audit needs every line number; only the text goes
+        log_lines = log_lines.selectExpr(
+            "filename", "line_no", f"IF({cond}, line, NULL) AS line"
+        )
+    partials = log_lines.mapInPandas(
+        _exact_fn(*_exact_args(cprog, now_us), audit=audit),
+        schema=CHUNK_SCHEMA,
+    )
+    store = _merged(cprog, partials, chunked=False)
+    rows = store._jdf.collectAsList()
+    if audit.value:
+        return None
+    return DataFrame(
+        sess._jsparkSession.createDataFrame(rows, store._jdf.schema()),
+        sess,
+    )
 
 
 def _audit_chunks(finals) -> bool:
@@ -941,57 +1130,49 @@ def _audit_chunks(finals) -> bool:
     return True
 
 
-def chunkfold_store(
+def _speculative_store(
     cprog,
     spark: SparkSession,
     log_lines: DataFrame,
     now_us: int = 0,
     _force_exchange: bool = False,
 ) -> DataFrame:
-    """Run a register-RMW program chunk-parallel.  Semi-eager: phase A
-    executes once (persisted at its store-sized output), phase B's
-    control rows are collected and replayed driver-side, and the
-    returned DataFrame reads the persisted partials + replay rows
-    through the fold-equivalent merge."""
+    """Phases A and B.  Semi-eager: phase A executes once (persisted
+    at its store-sized output) and its slim finals are collected for
+    the contiguity audit; the returned DataFrame reads the persisted
+    partials, plus phase B's replay rows when some chunk deferred a
+    line, through the merge."""
     from mtail_spark.session import (
         _parse_byte_size,
-        ensure_workers_can_import,
         estimated_local_input_bytes,
     )
 
-    ensure_workers_can_import(spark)
-
-    pats = cprog._fold_prefilter_patterns()
-    if pats and not cprog._java_compilable(spark, pats):
-        pats = None
-    if pats:
-        cond = F.col("line").rlike(pats[0])
-        for pat in pats[1:]:
-            cond = cond | F.col("line").rlike(pat)
+    cond = _prefilter_sql(cprog, spark)
+    if cond:
         log_lines = log_lines.filter(cond)
 
-    # Size text-scan splits to cluster parallelism (text has no row
-    # groups, so ensure_parallelism's parquet path doesn't apply), and
-    # decide the chunking mode: when the scan itself plans enough
-    # splits, the splits ARE the chunks — Spark's text source lists a
-    # file's splits in offset order (the same guarantee
+    # Size text-scan splits to cluster parallelism for phase A (text
+    # has no row groups, so ensure_parallelism's parquet path doesn't
+    # apply), and decide the chunking mode: when the scan itself plans
+    # enough splits, the splits ARE the chunks — Spark's text source
+    # lists a file's splits in offset order (the same guarantee
     # sources/logs.py's splittable line numbering rests on), so each
     # scan partition is one contiguous per-file line range and phase A
-    # needs NO exchange and NO sort at all.  Otherwise (wholetext
-    # reads, in-memory relations, few-split scans) fall back to an
-    # explicit line_no-bucketed exchange.
+    # needs NO exchange and NO sort at all.  Otherwise (in-memory
+    # relations, few-split scans) fall back to an explicit
+    # line_no-bucketed exchange.  The split size is restored once
+    # phase A has run.
+    mpb = "spark.sql.files.maxPartitionBytes"
     par = spark.sparkContext.defaultParallelism
     est = estimated_local_input_bytes(log_lines)
-    splits = None
+    splits = restore = None
     if est:
-        cur = _parse_byte_size(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-        )
+        orig = spark.conf.get(mpb, "128MB")
+        cur = _parse_byte_size(orig)
         want = min(max(est // (par * 2), 131072), cur)
         if want != cur:
-            spark.conf.set(
-                "spark.sql.files.maxPartitionBytes", str(want)
-            )
+            spark.conf.set(mpb, str(want))
+            restore = orig
         splits = max(1, est // want)
     zero_exchange = (
         not _force_exchange
@@ -1011,79 +1192,53 @@ def chunkfold_store(
             .repartition(F.col("filename"), F.col("__chunk"))
             .sortWithinPartitions("filename", "__chunk", "line_no")
         )
-    fn = _phase_a_fn(
-        cprog.src,
-        cprog.name,
-        cprog.syslog_use_current_year,
-        cprog.override_timezone,
-        now_us,
-    )
+    fn = _phase_a_fn(*_exact_args(cprog, now_us))
     df_a = chunked.mapInPandas(fn, schema=CHUNK_SCHEMA).persist()
     # Job 1 materializes phase A and brings back ONLY the slim audit
-    # tuples — O(chunks) rows of (file, chunk, max_line, disorder).
-    # Register snapshots and deferred raw lines (the O(chunks x
-    # record-length) phase-B payloads the r5 review sized at ~10M
-    # rows for 100 TB) never leave the executors.
-    finals = (
-        df_a.filter(F.col("row_type") == 1)
-        .select("src_file", "chunk", "value_i", "value_f")
-        .collect()
-    )
+    # tuples — O(chunks) rows of (file, chunk, max_line, disorder,
+    # deferred lines).  Register snapshots and deferred raw lines
+    # never leave the executors.
+    try:
+        finals = (
+            df_a.filter(F.col("row_type") == 1)
+            .select("src_file", "chunk", "value_i", "value_f",
+                    "bucket_count")
+            .collect()
+        )
+    finally:
+        if restore is not None:
+            spark.conf.set(mpb, restore)
     if zero_exchange and not _audit_chunks(finals):
         # the caller's relation doesn't deliver contiguous in-order
         # per-file ranges per partition: redo with an explicit
         # line_no-bucketed exchange (sound for any ordered relation)
         df_a.unpersist()
-        return chunkfold_store(
+        return _speculative_store(
             cprog, spark, log_lines, now_us, _force_exchange=True
         )
 
-    out_cols = [
-        c for c in _COLS if c not in ("row_type", "payload_json")
-    ]
     # The merge job's inputs are store-sized rows spread over one
     # cached partition PER CHUNK; without narrowing, each branch pays
     # a task per chunk (648 chunks -> ~1300 near-empty tasks, ~5 s of
     # pure scheduling at 30M lines/10x-split sizing).  coalesce is a
     # narrow read over the cache — no shuffle, parallelism capped at
     # the cluster width either way by the store-agg exchange.
-    ncoal = max(2, spark.sparkContext.defaultParallelism // 2)
-    merged_src = df_a.coalesce(ncoal)
-    partials = merged_src.filter(F.col("row_type") == 0).select(out_cols)
-    if finals:
-        # Phase B rides the merge job: per-file replay as a grouped
-        # map over the persisted control rows.  One file's replay is
-        # inherently sequential (it IS the fold of that file's
-        # deferred lines), but files replay in parallel on executors
-        # and the driver pass over deferred prefixes is gone.
-        rfn = _replay_fn(
-            cprog.src,
-            cprog.name,
-            cprog.syslog_use_current_year,
-            cprog.override_timezone,
-            now_us,
-        )
+    partials = df_a.coalesce(max(2, par // 2))
+    if any(r.bucket_count for r in finals):
+        # Phase B: per-file replay of the deferred lines as a grouped
+        # map over the persisted control rows, inside the merge job.
+        # One file's replay is sequential (it IS the fold of that
+        # file's deferred lines); files replay in parallel.
         replayed = (
-            merged_src.filter(F.col("row_type") != 0)
+            partials.filter(F.col("row_type") != 0)
             .groupBy("src_file")
-            .applyInPandas(rfn, schema=CHUNK_SCHEMA)
-            .select(out_cols)
+            .applyInPandas(
+                _replay_fn(*_exact_args(cprog, now_us)),
+                schema=CHUNK_SCHEMA,
+            )
         )
         partials = partials.unionByName(replayed)
-    else:
-        # zero input rows: the store is still the zero-init store
-        # (reference one-shot over an empty file exports zero-valued
-        # scalar counters/histograms; the vectorized backend's
-        # identity-event union gives the same)
-        zero = _partials_with_tags(TrackingStore(cprog.checked), "")
-        loc = spark.createDataFrame(
-            [tuple(r[c] for c in _COLS) for r in zero],
-            schema=CHUNK_SCHEMA,
-        ).select(out_cols)
-        partials = partials.unionByName(loc)
-    out = _merge_chunk_partials(
-        partials, cprog.name, kinds=cprog.exported_kinds
-    )
+    out = _merged(cprog, partials, chunked=True)
     # keep a handle so callers/tests can unpersist the phase-A cache
     out._chunkfold_cache = df_a
     return out

@@ -1402,6 +1402,73 @@ def _values_sql(rows: list, cols) -> str:
     return f"SELECT * FROM VALUES {vals} AS __z({names}){where}"
 
 
+def exported_metrics(prog: CheckedProgram) -> dict:
+    """Exported name -> MetricInfo, for every non-hidden metric."""
+    return {
+        mi.decl.exported_name or n: mi
+        for n, mi in prog.metrics.items() if not mi.decl.hidden
+    }
+
+
+def per_metric_sql(exported: dict, fn, default: str = "NULL") -> str:
+    """CASE arms over the metric name: fn(mi) is a metric's SQL, or
+    None to take `default`; metrics with equal SQL share one arm."""
+    arms: dict = {}
+    for nm, mi in exported.items():
+        v = fn(mi)
+        if v is not None:
+            arms.setdefault(v, []).append(sq(nm))
+    if not arms:
+        return default
+    return "CASE " + " ".join(
+        f"WHEN name IN ({', '.join(ns)}) THEN {v}"
+        for v, ns in arms.items()
+    ) + f" ELSE {default} END"
+
+
+def store_select_sql(compiled, exported: dict, bucket_col, **values) -> str:
+    """The STORE_SCHEMA select list over an aggregated store relation
+    with columns `name` and `labels` (the label values, in key order).
+    Metric metadata (kind, vtype, label keys, bucket bounds) is
+    compile-time constant and enters as CASE arms over the metric
+    name; `values` holds the SQL of value_i, value_f, value_s,
+    bucket_count, bucket_sum and ts_us, and bucket_col(k, bound)
+    names the column counting a histogram's k-th bucket."""
+    def hist(mi):
+        return mi.decl.kind == "histogram"
+
+    def buckets(mi):
+        return "array(" + ", ".join(
+            f"named_struct('le', {_sql_double(m)}, 'count', "
+            f"CAST(coalesce({bucket_col(k, m)}, 0) AS BIGINT))"
+            for k, m in enumerate(_bucket_maxes(mi))
+        ) + ")"
+
+    cols = {
+        "prog": sq(compiled.name),
+        "name": "name",
+        "kind": per_metric_sql(exported, lambda mi: sq(mi.decl.kind)),
+        "vtype": per_metric_sql(
+            exported, lambda mi: sq("Buckets" if hist(mi) else mi.vtype)
+        ),
+        # unlabelled metrics carry an empty map
+        "labels": per_metric_sql(
+            exported,
+            lambda mi: "map_from_arrays(array("
+            + ", ".join(sq(k) for k in mi.decl.keys) + "), labels)"
+            if mi.decl.keys else None,
+            "map()",
+        ),
+        "buckets": per_metric_sql(
+            exported, lambda mi: buckets(mi) if hist(mi) else None
+        ),
+        **values,
+    }
+    return ", ".join(
+        f"CAST({cols[c]} AS {t}) AS {c}" for c, t in _STORE_COLS
+    )
+
+
 def _lines_view(compiled) -> str:
     """Temp view the program's store SQL reads its log lines from."""
     return f"__mtail_lines_{id(compiled)}"
@@ -1468,10 +1535,7 @@ def store_sql(compiled, now_us: int, tz: str | None, single_file: bool,
     vz = Vectorizer(prog, now_us=now_us, syslog_year=syslog_year, tz=tz)
     vz.compile()
     view = _lines_view(compiled)
-    exported = {
-        mi.decl.exported_name or n: mi
-        for n, mi in prog.metrics.items() if not mi.decl.hidden
-    }
+    exported = exported_metrics(prog)
     hidden = [
         sq(mi.decl.exported_name or n)
         for n, mi in prog.metrics.items() if mi.decl.hidden
@@ -1627,22 +1691,6 @@ def store_sql(compiled, now_us: int, tz: str | None, single_file: bool,
             "FROM __per_file GROUP BY name, labels)"
         )
 
-    # Store assembly runs inside the same plan: metric metadata
-    # (kind, vtype, label keys, bucket bounds) is compile-time
-    # constant and enters as CASE arms over the metric name.
-    def per_metric(fn, default="NULL"):
-        arms: dict = {}
-        for nm, mi in exported.items():
-            v = fn(mi)
-            if v is not None:
-                arms.setdefault(v, []).append(sq(nm))
-        if not arms:
-            return default
-        return "CASE " + " ".join(
-            f"WHEN name IN ({', '.join(ns)}) THEN {v}"
-            for v, ns in arms.items()
-        ) + f" ELSE {default} END"
-
     def counter(mi):
         return mi.decl.kind == "counter"
 
@@ -1652,54 +1700,35 @@ def store_sql(compiled, now_us: int, tz: str | None, single_file: bool,
     def last_write(mi):
         return not counter(mi) and not hist(mi)
 
-    def buckets(mi):
-        return "array(" + ", ".join(
-            f"named_struct('le', {_sql_double(m)}, 'count', "
-            f"CAST(coalesce(__b{all_bounds.index(m)}, 0) AS BIGINT))"
-            for m in _bucket_maxes(mi)
-        ) + ")"
+    def per_metric(fn, default="NULL"):
+        return per_metric_sql(exported, fn, default)
 
-    cols = {
-        "prog": sq(compiled.name),
-        "name": "name",
-        "kind": per_metric(lambda mi: sq(mi.decl.kind)),
-        "vtype": per_metric(
-            lambda mi: sq("Buckets" if hist(mi) else mi.vtype)
-        ),
-        # unlabelled metrics carry an empty map, as the folds do
-        "labels": per_metric(
-            lambda mi: "map_from_arrays(array("
-            + ", ".join(sq(k) for k in mi.decl.keys) + "), labels)"
-            if mi.decl.keys else None,
-            "map()",
-        ),
-        "value_i": per_metric(
+    select = store_select_sql(
+        compiled, exported,
+        lambda k, m: f"__b{all_bounds.index(m)}",
+        value_i=per_metric(
             lambda mi: "sum_i" if counter(mi) and mi.vtype == "Int"
             else "lvi" if has_lww and last_write(mi) else None
         ),
-        "value_f": per_metric(
+        value_f=per_metric(
             lambda mi: "sum_f" if counter(mi) and mi.vtype == "Float"
             else "lvf" if has_lww and last_write(mi) else None
         ),
-        "value_s": per_metric(
+        value_s=per_metric(
             lambda mi: "lvs" if has_text and last_write(mi) else None
         ),
-        "buckets": per_metric(lambda mi: buckets(mi) if hist(mi) else None),
-        "bucket_count": per_metric(lambda mi: "n_obs" if hist(mi) else None),
-        "bucket_sum": per_metric(
+        bucket_count=per_metric(lambda mi: "n_obs" if hist(mi) else None),
+        bucket_sum=per_metric(
             lambda mi: "coalesce(sum_f, 0.0)" if hist(mi) else None
         ),
         # untouched (zero-init-only) counters carry the epoch-0
         # timestamp (golden hash requires it); touched metrics keep
         # the timestamp of their last real write
-        "ts_us": per_metric(
+        ts_us=per_metric(
             lambda mi: "CASE WHEN n_obs = 0 THEN 0 ELSE last_ts END"
             if counter(mi) else None,
             "last_ts",
         ),
-    }
-    select = ", ".join(
-        f"CAST({cols[c]} AS {t}) AS {c}" for c, t in _STORE_COLS
     )
     where = f" WHERE NOT (name IN ({', '.join(hidden)}))" if hidden else ""
     return f"WITH {', '.join(ctes)} SELECT {select} FROM __store{where}"

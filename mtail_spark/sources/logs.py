@@ -174,7 +174,9 @@ def read_log_lines(
             "filename", F.posexplode(lines).alias("line_no", "line")
         ).withColumn("line", F.regexp_replace("line", "\r$", ""))
         return df.select(
-            _fname_col(single), "line_no", "line"
+            _fname_col(single),
+            F.col("line_no").alias("line_no", metadata=WHOLE_FILES_MD),
+            "line",
         )
     df = (
         spark.read.text(path)
@@ -210,6 +212,10 @@ def _is_single_local_file(path) -> bool:
 
 SINGLE_FILE_MD = {"mtail_single_file": True}
 
+# line_no of a whole-file read: each file arrives whole in one
+# partition, numbered 0, 1, 2, ... (chunkfold's exact path audits it)
+WHOLE_FILES_MD = {"mtail_whole_files": True}
+
 
 def _fname_col(single: bool):
     """filename column, marked with single-file metadata when the
@@ -241,6 +247,17 @@ def is_single_file_relation(df: DataFrame) -> bool:
     except Exception:
         return False
     return True
+
+
+def is_whole_file_relation(df: DataFrame) -> bool:
+    """True when line_no carries the whole-file marker of
+    read_log_lines' wholetext read.  A hint, not a guarantee: the
+    consumer audits the line numbers it is handed."""
+    try:
+        md = df.schema["line_no"].metadata
+    except Exception:
+        return False
+    return bool(md and md.get("mtail_whole_files", False))
 
 
 def log_lines_from_df(

@@ -1,19 +1,22 @@
 """Chunk-parallel speculative fold backend (compiler/chunkfold.py):
 fold-equivalence by construction, checked empirically — every test
 compares the chunkfold store (values AND datum timestamps) against
-the sequential fold over the same lines, with CHUNK_LINES shrunk so
-small inputs still exercise many chunk boundaries, deferral, salvage
-and the replay."""
+the sequential fold over the same lines.  A whole-file read takes the
+exact path; the same lines with the whole-file marker stripped take
+the speculative one, with CHUNK_LINES shrunk so small inputs still
+exercise many chunk boundaries, deferral, salvage and the replay."""
 
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from mtail_spark.compiler import chunkfold as CF
 from mtail_spark.compiler.api import compile_program
-from mtail_spark.sources.logs import read_log_lines
+from mtail_spark.sources.logs import is_whole_file_relation, read_log_lines
 from mtail_spark.store import rows_from_df
 from tests.conftest import requires_reference
+from tests.test_store_plan import _count_py4j
 
 EX = "/root/reference/examples"
 TD = "/root/reference/internal/mtail/testdata"
@@ -34,13 +37,41 @@ def _run(spark, prog, df, backend):
     return m
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def _speculative(df):
+    """The same lines without the whole-file marker: chunkfold runs
+    them through phases A and B."""
+    return df.select(
+        "filename", F.col("line_no").alias("line_no", metadata={}), "line"
+    )
+
+
+def _replays(spark, prog, df) -> bool:
+    """True when the speculative path deferred a line, so its merge
+    runs phase B's grouped replay."""
+    out = prog.run_batch(spark, df, backend="chunkfold", cache_plan=False)
+    out._chunkfold_cache.unpersist()
+    return "FlatMapGroupsInPandas" in _plan(out)
+
+
 def _assert_equal(spark, prog, df, monkeypatch, chunk_lines=97):
+    """fold == chunkfold; for a whole-file read, also == chunkfold's
+    speculative path over the same lines."""
     monkeypatch.setattr(CF, "CHUNK_LINES", chunk_lines)
     a = _run(spark, prog, df, "fold")
-    b = _run(spark, prog, df, "chunkfold")
-    diff = {k: (a.get(k), b.get(k)) for k in a.keys() | b.keys()
-            if a.get(k) != b.get(k)}
-    assert not diff, f"chunkfold != fold: {dict(list(diff.items())[:5])}"
+    others = [df]
+    if is_whole_file_relation(df):
+        others.append(_speculative(df))
+    for rel in others:
+        b = _run(spark, prog, rel, "chunkfold")
+        diff = {k: (a.get(k), b.get(k)) for k in a.keys() | b.keys()
+                if a.get(k) != b.get(k)}
+        assert not diff, (
+            f"chunkfold != fold: {dict(list(diff.items())[:5])}"
+        )
     return a
 
 
@@ -196,6 +227,8 @@ def test_all_kinds_and_registers(spark, tmp_path, monkeypatch):
     assert prog.chunkfoldable
     df = read_log_lines(spark, str(p))
     _assert_equal(spark, prog, df, monkeypatch, chunk_lines=61)
+    # the speculative run above deferred lines: phase B stays covered
+    assert _replays(spark, prog, _speculative(df))
 
 
 def test_multi_file_merge(spark, tmp_path, monkeypatch):
@@ -206,6 +239,7 @@ def test_multi_file_merge(spark, tmp_path, monkeypatch):
     prog = compile_program(REG_KINDS_PROG, "kinds.mtail")
     df = read_log_lines(spark, str(d))
     _assert_equal(spark, prog, df, monkeypatch, chunk_lines=131)
+    assert _replays(spark, prog, _speculative(df))
 
 
 def test_audit_falls_back_on_disorder(spark, tmp_path, monkeypatch):
@@ -275,6 +309,142 @@ def test_txn_demo_through_chunkfold(spark, monkeypatch):
         }
     assert stores["fold"] == stores["chunkfold"] == stores["vector"]
     assert stores["vector"][("commits_total", ())]["labels"] == {}
+
+
+# ------------------------------------------------------- exact path
+
+RISES_PROG = """
+hidden gauge prev
+counter rises
+counter by_prev by p
+
+/^v (?P<v>\\d+)$/ {
+  $v > prev {
+    rises++
+  }
+  by_prev[prev]++
+  prev = $v
+}
+"""
+
+
+def _write_rises(path, n, seed):
+    import random
+
+    rng = random.Random(seed)
+    with open(path, "w") as f:
+        for _ in range(n):
+            f.write(f"v {rng.randrange(5)}\n")
+
+
+def test_exact_path_is_one_action(spark, tmp_path, monkeypatch):
+    """A whole-file chunkfold call leaves nothing persisted, plans no
+    replay, leaves maxPartitionBytes as it was, and a warm run_batch
+    makes at most 100 py4j round trips (1443 on the benchmark's
+    register workload when phase A was persisted and audited by a job
+    of its own, then merged through Column calls)."""
+    d = tmp_path / "logs"
+    d.mkdir()
+    for i in range(3):
+        _write_rises(str(d / f"r{i}.log"), 400, i)
+    prog = compile_program(RISES_PROG, "rises_exact.mtail")
+    mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    prog.run_batch(
+        spark, read_log_lines(spark, str(d)), backend="chunkfold",
+        cache_plan=False,
+    ).collect()
+    df = read_log_lines(spark, str(d))
+    calls = _count_py4j(spark, monkeypatch)
+    out = prog.run_batch(spark, df, backend="chunkfold", cache_plan=False)
+    n = calls()
+    monkeypatch.undo()
+    assert n <= 100, f"{n} py4j round trips for a warm run_batch"
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == mpb
+    assert getattr(out, "_chunkfold_cache", None) is None
+    plan = _plan(out)
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "InMemoryRelation" not in plan
+    assert _store_map(out) == _run(spark, prog, df, "fold")
+
+
+def test_register_read_at_file_start(spark, tmp_path, monkeypatch):
+    """`prev` is read before any write at the start of every file.
+    The exact path knows it is the initial 0; the speculative path
+    (an in-memory relation, 7-line chunks) defers those reads and
+    replays them.  Both give run_local's store."""
+    d = tmp_path / "logs"
+    d.mkdir()
+    paths = []
+    for i in range(2):
+        paths.append(d / f"r{i}.log")
+        _write_rises(str(paths[-1]), 300, 10 + i)
+    prog = compile_program(RISES_PROG, "rises_start.mtail")
+    assert prog.chunkfoldable
+    monkeypatch.setattr(CF, "CHUNK_LINES", 7)
+    df = read_log_lines(spark, str(d))
+    exact = prog.run_batch(spark, df, backend="chunkfold", cache_plan=False)
+    assert getattr(exact, "_chunkfold_cache", None) is None
+    mem = spark.createDataFrame(
+        df.collect(), "filename string, line_no long, line string"
+    )
+    assert not is_whole_file_relation(mem)
+    assert _replays(spark, prog, mem)
+    assert _store_map(exact) == _run(spark, prog, mem, "chunkfold")
+    want: dict = {}
+    for p in paths:
+        for r in prog.run_local(open(p).read().splitlines(), filename=str(p)):
+            want[(r.name, r.labels)] = want.get((r.name, r.labels), 0) + r.value
+    assert {k: v for k, (v, _ts) in _store_map(exact).items()} == want
+
+
+def test_split_file_fails_the_audit(spark, tmp_path, monkeypatch):
+    """A whole-file read dealt round robin over two partitions keeps
+    its marker but fails the audit (its line numbers no longer step by
+    1 in a partition): the call falls back to the speculative path and
+    still gives the fold's store."""
+    p = tmp_path / "kinds.log"
+    _render_kinds_log(str(p), 1500)
+    prog = compile_program(REG_KINDS_PROG, "kinds.mtail")
+    monkeypatch.setattr(CF, "CHUNK_LINES", 89)
+    df = read_log_lines(spark, str(p))
+    split = df.repartition(2)
+    assert is_whole_file_relation(split)
+    out = prog.run_batch(spark, split, backend="chunkfold", cache_plan=False)
+    cache = getattr(out, "_chunkfold_cache", None)
+    assert cache is not None, "no fallback to the speculative path"
+    got = _store_map(out)
+    cache.unpersist()
+    assert got == _run(spark, prog, df, "fold")
+
+
+def test_folds_zero_initialise_when_the_prefilter_drops_every_line(
+    spark, tmp_path
+):
+    """The JVM prefilter drops the only line: the folds still give
+    the zero rows of a, b and h, as run_local does."""
+    prog = compile_program(
+        "counter a\ncounter b\nhistogram h buckets 1, 2\n/x/ { b++ }\n",
+        "zeros_fold.mtail",
+    )
+    assert prog._fold_prefilter_patterns()
+    want = sorted(prog.run_local(["y"], filename="app.log"),
+                  key=lambda r: r.sort_key())
+    p = tmp_path / "app.log"
+    p.write_text("y\n")
+    mem = spark.createDataFrame(
+        [("app.log", 0, "y")], "filename string, line_no long, line string"
+    )
+    for backend, df in (("fold", mem), ("chunkfold", mem),
+                        ("chunkfold", read_log_lines(spark, str(p)))):
+        out = prog.run_batch(spark, df, backend=backend, cache_plan=False)
+        got = sorted(rows_from_df(out), key=lambda r: r.sort_key())
+        cache = getattr(out, "_chunkfold_cache", None)
+        if cache is not None:
+            cache.unpersist()
+        assert [r.name for r in got] == ["a", "b", "h"], backend
+        assert got == want, backend
 
 
 # ----------------------------------------------------- golden parity

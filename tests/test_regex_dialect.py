@@ -1,11 +1,12 @@
 """Every backend matches as Go's RE2 does.
 
 mtail matches with RE2, whose \\d \\w \\s and \\b are ASCII, whose `$`
-is the end of the text and whose `.` is any character but \\n.  Left
-to themselves, java.util.regex (the vectorized backend and the fold
-prefilter) and Python `re` (fold, chunkfold, run_local) each differ
-from RE2 somewhere on these lines.  Each row's expected lines are
-written by hand from RE2's definitions, not taken from any backend.
+is the end of the text, whose `.` is any character but \\n and whose
+(?i) folds case by Unicode rules.  Left to themselves, java.util.regex
+(the vectorized backend and the fold prefilter) and Python `re` (fold,
+chunkfold, run_local) each differ from RE2 somewhere on these lines.
+Each row's expected lines are written by hand from RE2's definitions,
+not taken from any backend.
 """
 
 import pytest
@@ -43,13 +44,16 @@ ROWS = [
     # character only
     ("quote", r"^\Qa.b\E$", {"a.b"}),
     ("quote_repeat", r"^\Q+(\E?$", {"+(", "+"}),
+    # (?i) folds case by Unicode rules: the Kelvin sign U+212A is a k
+    ("fold_case", r"(?i)^key$", {"KEY", "Key", "\u212aey"}),
+    ("fold_case_group", r"^(?i:k)ey$", {"Key", "\u212aey"}),
 ]
 
 LINES = [
     "34 x", "\u0663\u0664 x", "a b", "a\u00a0b", "a\x0bb", "ab!",
     "été!", "a", "a\r", "a\u0085", "a\u2028", "a\rb", "a\u0085b",
     " é", "A.é", "Axé", "\U0001F600", "AB", "ABD", "a.b", "axb", "+(",
-    "+",
+    "+", "KEY", "Key", "\u212aey",
 ]
 
 SRC = "counter hits by case\n" + "".join(
